@@ -17,7 +17,12 @@ from gem_data_wrangle_spark.functions import strings as S
 
 def _sql_str(s: str) -> str:
     """A Python string as a Spark SQL string literal (regexes carry
-    backslashes; the SQL lexer consumes one escaping level)."""
+    backslashes; the SQL lexer consumes one escaping level).
+
+    Correct only while ``spark.sql.parser.escapedStringLiterals`` is
+    false — with it true the lexer keeps the doubled backslashes and
+    every regex written through ``F.expr`` changes meaning.
+    ``session.get_spark`` pins it to false."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
@@ -25,18 +30,6 @@ def _q(name: str) -> str:
     """A column name as a backtick-quoted SQL identifier (GEM headers
     carry spaces, slashes and parens)."""
     return "`" + name.replace("`", "``") + "`"
-
-
-def add_row_id(df: DataFrame, col: str = "row_id") -> DataFrame:
-    """Stable pre-explode row identifier (``GEM/Hydroplants_GEM.R:162``).
-
-    ``monotonically_increasing_id`` is partition-local and shuffle-free;
-    it is only ever used as a *grouping key* (never as a dense rank), so
-    its non-contiguity is irrelevant and it scales to any cluster size —
-    unlike ``row_number()`` over a global window, which would funnel
-    every row through one partition.
-    """
-    return df.withColumn(col, F.monotonically_increasing_id())
 
 
 def split_ownership(
@@ -47,7 +40,6 @@ def split_ownership(
     out_owner: str = "company_name",
     out_share: str = "ownership_share",
     out_alloc: str = "capacity_allocated",
-    row_id_col: str = "row_id",
     pct_grammar: str = "bracketed",
 ) -> DataFrame:
     """The ownership-split kernel (SURVEY §2.10) — both reference
@@ -60,12 +52,12 @@ def split_ownership(
       cells exist in the coal tracker).
     * ``equal_share=True`` — hydro/nuclear/solar/wind/bio/geo semantics
       (``GEM/Hydroplants_GEM.R:159-193``): missing percents default to
-      an equal split ``1/n`` among the row's owners, computed with a
-      window count per original row (no collapse).
+      an equal split ``1/n`` among the row's owners. ``n`` is
+      ``size(split(owner))`` — exactly the number of rows the explode
+      emits for that input row (the reference's per-row count).
 
-    Scale: the only shuffle is the window partition on ``row_id`` in
-    the equal-share variant, and because ``row_id`` is unique-ish the
-    key space is maximal → no skew. The explode itself is narrow.
+    Scale: no shuffle in either variant; the explode and the share are
+    narrow, so the kernel keeps its input's partitioning.
 
     ``pct_grammar`` selects the percent-extraction grammar (the
     reference scripts use two different regexes — see
@@ -74,12 +66,11 @@ def split_ownership(
     Construction note (r17, guide §1.2 "per-task work" — driver
     edition): every Column below is built as ONE server-side
     ``F.expr`` parse instead of a chain of py4j Column-object calls.
-    The analyzed plan is IDENTICAL to the Column-built form (asserted
-    in tests/test_round17_fixes.py); only the number of driver
-    round-trips changes. SQL-literal traps encoded here: ``100.0``
-    lexes as DECIMAL(4,1) in Spark SQL, so doubles are written with
-    the ``D`` suffix; regex literals pay one extra escaping level
-    (``_sql_str``).
+    The rows are identical to the Column-built row-id/window form
+    (asserted in tests/test_round17_fixes.py). SQL-literal traps
+    encoded here: ``100.0`` lexes as DECIMAL(4,1) in Spark SQL, so
+    doubles are written with the ``D`` suffix; regex literals pay one
+    extra escaping level (``_sql_str``).
     """
     part = "_owner_part"
     name_sql = f"trim(regexp_extract({_q(part)}, {_sql_str(S.OWNER_NAME_RE)}, 0))"
@@ -89,19 +80,12 @@ def split_ownership(
         f"case when {pct_extract} != '' "
         f"then cast({pct_extract} as double) / 100.0D end"
     )
-    exploded = add_row_id(df, row_id_col).withColumn(
-        part,
-        F.expr(f"explode(split({_q(owner_col)}, {_sql_str(S.OWNER_SEP)}))"),
-    )
+    owners = f"split({_q(owner_col)}, {_sql_str(S.OWNER_SEP)})"
+    exploded = df.withColumn(part, F.expr(f"explode({owners})"))
     exploded = exploded.withColumns(
         {out_owner: F.expr(name_sql), "_pct": F.expr(pct_sql)}
     )
-    if equal_share:
-        share = F.expr(
-            f"coalesce(_pct, 1.0D / count(1) over (partition by {_q(row_id_col)}))"
-        )
-    else:
-        share = F.col("_pct")
+    share = F.expr(f"coalesce(_pct, 1.0D / size({owners}))" if equal_share else "_pct")
     return (
         exploded.withColumn(out_share, share)
         .withColumn(
@@ -120,54 +104,49 @@ def harmonize_coordinates(
 ) -> DataFrame:
     """Coordinate harmonization (``GEM/Coalplants_GEM.R:63-76``, in all
     8 scripts): per location, if units disagree on (lat, lon) take the
-    mean, else the single value; then join the harmonized coords back
-    onto the unit rows, replacing the originals.
+    mean, else the single value, replacing the originals on every unit
+    row. Rows with a NULL location get NULL coordinates (the
+    reference's equi-join matches no summary row for them).
 
     R parity note: the reference's ``mean()`` has no ``na.rm``, so one
     NULL coordinate poisons the mean for that location — emulated with
     the ``when(count(col) < count(*), NULL)`` guard.
 
-    Scale: one aggregation shuffle on the location key + one join. The
-    aggregated side is ~|locations| rows — smaller than units, but it
-    GROWS with the data, so no forced broadcast hint here: AQE's
-    runtime size check picks broadcast when the summary fits under
-    ``spark.sql.autoBroadcastJoinThreshold`` and falls back to a
-    shuffled join when it doesn't (a forced hint would OOM the driver
-    at 100× location cardinality).
+    Scale: the per-location aggregates are window functions over
+    ``location_col``, so the kernel's only shuffle is one hash exchange
+    of the unit rows on the location key. Its output stays
+    hash-partitioned on that key, which lets a downstream aggregate
+    grouping by the location (the fuel pipelines' group-sum) plan
+    without an exchange of its own.
     """
     # "more than one distinct (lat, lon)" as min(struct) != max(struct):
     # a count_distinct here would force an Expand + two-phase aggregate;
-    # min/max stay in one partial-aggregation pass and detect exactly
-    # the same condition (structs are never null, so min/max see every
-    # row and differ iff two rows disagree).
+    # min/max detect exactly the same condition (structs are never
+    # null, so min/max see every row and differ iff two rows disagree).
     #
-    # Construction note (r17): each aggregate/projection Column is one
-    # server-side F.expr parse — same analyzed plan as the Column-built
-    # form (tests/test_round17_fixes.py), ~3× fewer py4j round-trips
-    # (this was the chattiest kernel: 401 driver commands per call).
-    lat, lon = _q(lat_col), _q(lon_col)
-    pair = f"struct({lat} as a, {lon} as b)"
-    na_mean = (
-        "case when count({c}) < count(1) then cast(null as double) "
-        "else avg({c}) end"
+    # Construction note (r17): each projection is one server-side
+    # F.expr parse (~3× fewer py4j round-trips than the Column-built
+    # form; same rows — tests/test_round17_fixes.py).
+    loc, lat, lon = _q(location_col), _q(lat_col), _q(lon_col)
+    w = f"over (partition by {loc})"
+    # the pair is a column of its own so the exchange carries it once,
+    # not once per min/max input of each output coordinate
+    differ = f"min(_coords) {w} != max(_coords) {w}"
+
+    def harmonized(c: str) -> str:
+        return (
+            f"case when {loc} is null then cast(null as double) "
+            f"when not ({differ}) then first({c}) {w} "
+            f"when count({c}) {w} < count(1) {w} then cast(null as double) "
+            f"else avg({c}) {w} end"
+        )
+
+    rest = [_q(c) for c in df.columns if c not in (location_col, lat_col, lon_col)]
+    return df.withColumn("_coords", F.expr(f"struct({lat} as a, {lon} as b)")).select(
+        loc, *rest,
+        F.expr(harmonized(lat)).alias(lat_col),
+        F.expr(harmonized(lon)).alias(lon_col),
     )
-    summary = df.groupBy(location_col).agg(
-        F.expr(f"min({pair}) != max({pair})").alias("_coords_differ"),
-        F.expr(na_mean.format(c=lat)).alias("_lat_mean"),
-        F.expr(na_mean.format(c=lon)).alias("_lon_mean"),
-        F.expr(f"first({lat})").alias("_lat_first"),
-        F.expr(f"first({lon})").alias("_lon_first"),
-    )
-    summary = summary.select(
-        location_col,
-        F.expr(
-            "case when _coords_differ then _lat_mean else _lat_first end"
-        ).alias(lat_col),
-        F.expr(
-            "case when _coords_differ then _lon_mean else _lon_first end"
-        ).alias(lon_col),
-    )
-    return df.drop(lat_col, lon_col).join(summary, on=location_col, how="left")
 
 
 def expand_years(
@@ -357,7 +336,7 @@ def surrogate_ids(
     # with the data — AQE broadcasts it at runtime while it fits under
     # autoBroadcastJoinThreshold and falls back to a distributed hash
     # join when it doesn't (a hint here would OOM the driver at 100×
-    # key cardinality, the same reasoning as harmonize_coordinates).
+    # key cardinality).
     return df.join(dim, on=name_col, how="left")
 
 

@@ -5,7 +5,10 @@ per-fuel variations (SURVEY §2, §3); here each fuel is a ``FuelConfig``
 and the pipeline is a single composition of the engine's operators —
 one Catalyst job end-to-end, no intermediate materialization (the
 reference materializes ~11 intermediate data.frames per script,
-``GEM/Coalplants_GEM.R:17-229``).
+``GEM/Coalplants_GEM.R:17-229``), and one shuffle: the unit rows are
+hash-exchanged on the location key for the harmonize window, and the
+ownership explode, the 28× year expansion and the location group-sum
+all run on that partitioning.
 
 Canonical trace re-expressed (coal):
 read → select (:17-38) → status filter (:41) → unknown-start drop
@@ -61,9 +64,13 @@ from gem_data_wrangle_spark.operators.joins import join_lookup_dim
 from gem_data_wrangle_spark.operators.kernels import _q, _sql_str
 
 
-def _sql_in(values) -> str:
-    """Sequence of strings as a SQL IN-list body."""
-    return ", ".join(_sql_str(v) for v in values)
+def _sql_in(col_sql: str, values) -> str:
+    """``col_sql IN (values)`` as SQL. ``in ()`` does not parse, so an
+    empty sequence renders ``false`` — what ``F.col(c).isin([])``
+    evaluates to on every row, NULL included."""
+    if not values:
+        return "false"
+    return f"{col_sql} in ({', '.join(_sql_str(v) for v in values)})"
 
 # The 19-column output contract, identical in every reference script
 # (``GEM/Coalplants_GEM.R:214-219``, ``GEM/TotalData_GEM.R:38-41``).
@@ -180,7 +187,7 @@ def run_fuel_pipeline(df: DataFrame, cfg: FuelConfig, country_dim: DataFrame) ->
         # latency work — analyzed plan identical to the Column form,
         # same mechanism as the kernels.py rewrite)
         start = _q(cfg.start_year_col)
-        missing_sql = f"{start} in ({_sql_in(cfg.start_drop_sentinels)})"
+        missing_sql = _sql_in(start, cfg.start_drop_sentinels)
         if cfg.start_drop_null:
             missing_sql = f"({missing_sql} or {start} is null)"
         else:
@@ -190,7 +197,7 @@ def run_fuel_pipeline(df: DataFrame, cfg: FuelConfig, country_dim: DataFrame) ->
             missing_sql = f"coalesce({missing_sql}, false)"
         out = C.filter_not_and(
             out,
-            F.expr(f"Status in ({_sql_in(cfg.future_statuses)})"),
+            F.expr(_sql_in("Status", cfg.future_statuses)),
             F.expr(missing_sql),
         )
     # the ">0" sentinel replace runs AFTER the start-year step (:46→:50)
@@ -221,7 +228,9 @@ def run_fuel_pipeline(df: DataFrame, cfg: FuelConfig, country_dim: DataFrame) ->
 
     # --- location-level group-sum (:158-171): the unit/phase ID is
     # dropped BEFORE aggregating — the output row grain is
-    # (location, owner, year) plus the carried descriptive columns ---
+    # (location, owner, year) plus the carried descriptive columns.
+    # The keys include the location, so the aggregate needs no
+    # exchange of its own (harmonize already partitioned on it) ---
     group_cols = [
         cfg.location_col, cfg.country_col, cfg.plant_name_col, "Region",
         "company_name", "production_year", "Latitude", "Longitude",

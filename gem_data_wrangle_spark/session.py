@@ -13,21 +13,23 @@ from pyspark.sql import SparkSession
 
 
 def _int_env(names: tuple[str, ...], default: int) -> int:
-    """First numeric value among the named env vars, else ``default``.
+    """First positive integer value among the named env vars, else
+    ``default``.
 
     ``SPARK_GRAFT_CPUS`` feeds the ``local[...]`` master string, where
     non-numeric values like ``*`` are legal — but
     ``spark.sql.shuffle.partitions`` needs an integer, so a raw
     passthrough would build a session that dies with a
-    NumberFormatException at its first shuffle (ADVICE r16)."""
+    NumberFormatException at its first shuffle (ADVICE r16). Zero or
+    negative values are skipped the same way: a session with no
+    shuffle partitions fails at its first shuffle too."""
     for name in names:
-        raw = os.environ.get(name)
-        if raw is None:
-            continue
         try:
-            return int(raw)
+            value = int(os.environ.get(name, ""))
         except ValueError:
             continue
+        if value > 0:
+            return value
     return default
 
 
@@ -79,6 +81,9 @@ def get_spark(
     merged = dict(_DEFAULT_CONF)
     if conf:
         merged.update(conf)
+    # the kernels write regex literals through F.expr with one SQL
+    # escaping level (kernels._sql_str); pinned after the user merge
+    merged["spark.sql.parser.escapedStringLiterals"] = "false"
     for k, v in merged.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

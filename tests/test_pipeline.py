@@ -97,6 +97,19 @@ def test_coal_pipeline_end_to_end(spark):
     assert r["coordinates"] == "48.2, 2.2"
 
 
+def test_empty_start_drop_sentinels(spark):
+    """An empty sentinel tuple builds a valid drop predicate that keeps
+    the rows ``isin([])`` keeps: no start value is a sentinel, so the
+    announced unknown-start unit (L2) survives coal's drop step."""
+    from dataclasses import replace
+
+    def asset_ids(cfg):
+        out = run_fuel_pipeline(_units(spark), cfg, country_dim(spark))
+        return {r["asset_id"] for r in out.collect()}
+
+    assert asset_ids(replace(COAL, start_drop_sentinels=())) == asset_ids(COAL) | {"L2"}
+
+
 def test_coal_keeps_null_and_zero_capacity(spark):
     """Coal's capacity filter drops only the string sentinels
     (Coalplants_GEM.R:54) — NULL and zero survive; the gas/oil-family

@@ -44,6 +44,22 @@ def test_expand_years_is_narrow(spark, sf_dir):
     assert "Join" not in plan                        # no cross join
 
 
+def test_gem_pipelines_shuffle_once(spark, sf_dir):
+    """Every fuel pipeline hash-exchanges only its unit-grain rows, on
+    the location key: the harmonize window sets that partitioning, the
+    ownership share needs no row-id window, and the location group-sum
+    reuses it — the 28×-expanded rows never cross a shuffle."""
+    names = sorted(
+        n for n in entrymod.queries()
+        if n.startswith("gem_") and n.endswith("_pipeline")
+    )
+    assert len(names) == 8
+    for name in names:
+        plan = _plan(spark, name, sf_dir)
+        assert plan.count("Exchange hashpartitioning") == 1, name
+        assert "monotonically_increasing_id" not in plan, name
+
+
 def test_harmonize_has_no_expand(spark, sf_dir):
     # the min/max-struct rewrite must not regress to count_distinct's
     # Expand + double aggregate
@@ -52,11 +68,11 @@ def test_harmonize_has_no_expand(spark, sf_dir):
 
 
 def test_harmonize_broadcast_is_aqe_gated(spark, sf_dir):
-    """harmonize_coordinates must NOT force a broadcast hint: the
-    summary side is one row per location, which grows with the data —
-    the hint must come from AQE's runtime size check (small summary →
-    broadcast) and disappear when the summary exceeds the threshold
-    (no driver OOM at 100× location cardinality)."""
+    """harmonize_coordinates must NOT force a broadcast: the
+    per-location summary grows with the data (a broadcast of it runs
+    out of memory at 100× location cardinality). The kernel evaluates
+    it as a window, so no plan of it broadcasts; this pins that no
+    hint comes back."""
     from pyspark.sql import functions as F
 
     from gem_data_wrangle_spark.operators.kernels import harmonize_coordinates
@@ -74,8 +90,7 @@ def test_harmonize_broadcast_is_aqe_gated(spark, sf_dir):
     # to the planner/AQE
     logical = out._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in logical and "hints=[broadcast" not in logical
-    # with the threshold off, the planner must fall back to a
-    # non-broadcast join for this summary
+    # with the threshold off, nothing in the plan may broadcast
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -3,15 +3,18 @@
 The r17 construction-latency work rebuilt the three chattiest GEM
 kernels (harmonize_coordinates, split_ownership, expand_years) so each
 Column is ONE server-side ``F.expr`` parse instead of a chain of py4j
-Column-object round-trips. That is only legitimate if the analyzed
-plan is EXACTLY what the Column-built form produced — these tests pin
-that equivalence by rebuilding the pre-r17 Column forms inline and
-comparing normalized analyzed plans (expression IDs stripped).
+Column-object round-trips. These tests rebuild the pre-r17 Column
+forms inline and pin the equivalence: expand_years by comparing
+normalized analyzed plans (expression IDs stripped); harmonize_coordinates
+and split_ownership — since rewritten to a location window and a
+``size(split(owner))`` share, so their plans differ by design — by
+comparing the collected rows on a fixture that carries their edge cases.
 """
 
 from __future__ import annotations
 
 import re
+from collections import Counter
 
 import pytest
 from pyspark.sql import Window
@@ -29,7 +32,7 @@ def _norm(df) -> str:
 
 @pytest.fixture(scope="module")
 def units(spark):
-    return spark.range(0, 40).selectExpr(
+    base = spark.range(0, 40).selectExpr(
         "concat('U', id) as `GEM unit/phase ID`",
         "concat('L', id % 7) as `GEM location ID`",
         "cast(id % 180 - 90 as double) as Latitude",
@@ -41,6 +44,25 @@ def units(spark):
         "cast(1990 + id % 45 as string) as `Start year`",
         "case when id % 11 = 0 then cast(2015 + id % 25 as string) end as `Planned retirement`",
     )
+    edge = spark.createDataFrame(
+        [
+            # NULL location
+            ("UX1", None, 10.0, 20.0, "N1 [50%]; N2", "100", "2000", None),
+            # units disagree, one of them with a NULL coordinate
+            ("UX2", "LD", 1.0, 2.0, "D1", "10", "2001", None),
+            ("UX3", "LD", 3.0, None, "D2 [30%]", "20", "2002", None),
+            ("UX4", "LD", 5.0, 6.0, "D3; D4", "30", "2003", "2030"),
+            # trailing separator, empty owner, NULL owner
+            ("UX5", "LT", 7.0, 8.0, "T1 [40%];", "40", "2004", None),
+            ("UX6", "LE", 9.0, 9.0, "", "50", "2005", None),
+            ("UX7", "LN", 9.0, 9.0, None, "60", "2006", None),
+            # two identical input rows
+            ("UX8", "LI", 4.0, 4.0, "I1; I2", "70", "2007", None),
+            ("UX8", "LI", 4.0, 4.0, "I1; I2", "70", "2007", None),
+        ],
+        base.schema,
+    )
+    return base.unionByName(edge)
 
 
 def _harmonize_column_built(df, location_col, lat_col="Latitude", lon_col="Longitude"):
@@ -75,8 +97,9 @@ def _split_column_built(
     out_owner="company_name", out_share="ownership_share",
     out_alloc="capacity_allocated", row_id_col="row_id",
 ):
-    """The pre-r17 Column-built split_ownership, verbatim."""
-    exploded = K.add_row_id(df, row_id_col).withColumn(
+    """The pre-r17 Column-built split_ownership, verbatim (its row-id
+    helper inlined)."""
+    exploded = df.withColumn(row_id_col, F.monotonically_increasing_id()).withColumn(
         "_owner_part", S.explode_split(F.col(owner_col))
     )
     exploded = exploded.withColumns(
@@ -120,10 +143,24 @@ def _expand_column_built(
     )
 
 
-def test_harmonize_coordinates_plan_identical(units):
+def _rows(df) -> Counter:
+    return Counter(tuple(r) for r in df.collect())
+
+
+def test_harmonize_coordinates_rows_identical(units):
+    """The location-window form returns the groupBy + left-join form's
+    rows and columns: NULL locations get NULL coordinates, a disagreeing
+    location with a NULL coordinate is NA-poisoned on that axis only."""
     new = K.harmonize_coordinates(units, "GEM location ID")
     old = _harmonize_column_built(units, "GEM location ID")
-    assert _norm(new) == _norm(old)
+    assert new.columns == old.columns
+    assert _rows(new) == _rows(old)
+    edge = {
+        r["GEM unit/phase ID"]: (r["Latitude"], r["Longitude"])
+        for r in new.filter("`GEM unit/phase ID` like 'UX%'").collect()
+    }
+    assert edge["UX1"] == (None, None)
+    assert edge["UX2"] == (3.0, None)
 
 
 @pytest.mark.parametrize("equal_share,grammar", [
@@ -131,7 +168,10 @@ def test_harmonize_coordinates_plan_identical(units):
     (True, "ref_hydro"),
     (True, "bracketed"),
 ])
-def test_split_ownership_plan_identical(units, equal_share, grammar):
+def test_split_ownership_rows_identical(units, equal_share, grammar):
+    """The ``1/size(split(owner))`` share returns the row-id window
+    form's rows, including trailing-separator, empty, NULL and
+    duplicated owner rows."""
     new = K.split_ownership(
         units, "Owner", "Capacity (MW)",
         equal_share=equal_share, pct_grammar=grammar,
@@ -139,8 +179,9 @@ def test_split_ownership_plan_identical(units, equal_share, grammar):
     old = _split_column_built(
         units, "Owner", "Capacity (MW)",
         equal_share=equal_share, pct_grammar=grammar,
-    )
-    assert _norm(new) == _norm(old)
+    ).drop("row_id")
+    assert new.columns == old.columns
+    assert _rows(new) == _rows(old)
 
 
 @pytest.mark.parametrize("retirement", ["Planned retirement", None])
