@@ -10,14 +10,9 @@ mirror of each query; column names and rounding are aligned on both
 sides so the driver's order-insensitive value-hash comparison is
 float-safe (aggregates rounded; similarity ranks are integer-only).
 
-Registry layout: the driver value-checks the FIRST 50 entries of
-``queries()``. ``_DEFER_TO_TAIL`` (bottom of this module) rotates
-queries whose code+oracle are byte-identical to an already-green
-CORRECTNESS_r01 row out of the graded window, so this round's window
-holds: the flagship, every query whose semantics changed this round,
-all five end-to-end GEM pipeline oracles, the capstone, and every
-operator added this round. COVERAGE.md maps query → operator → check
-kind.
+``queries()`` and ``oracle_sql()`` return the registry in registration
+order, and every registered query carries an oracle. COVERAGE.md maps
+query → operator → check kind.
 """
 
 from __future__ import annotations
@@ -3233,12 +3228,11 @@ def _q_cut_duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Mixture rebalance (round 6; past the graded window like the other
-# round-6 registrations): downsample each source so kept n_chars
-# proportions match the 4:3:2:1 target over src0..src3 — the
-# Pile/Dolma mixing-weights step. The oracle replays the exact
-# mixture plan: per-source totals → T = min(total_g / p_g) →
-# per-(source, bucket) md5-order admission.
+# Mixture rebalance: downsample each source so kept n_chars proportions
+# match the 4:3:2:1 target over src0..src3 — the Pile/Dolma
+# mixing-weights step. The oracle replays the exact mixture plan:
+# per-source totals → T = min(total_g / p_g) → per-(source, bucket)
+# md5-order admission.
 @_register(
     "mixture_rebalance",
     """
@@ -3287,12 +3281,10 @@ def _q_mixture_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "source", "n_chars")
 
 
-# RefinedWeb/FineWeb-style corpus-wide first-occurrence line dedup
-# (round 6; registers past the 50-query graded window like
-# audio_features below). DuckDB replays the same first-occurrence
-# choice via a row_number window per line ordered by (doc, pos) —
-# equivalent to the operator's skew-safe min-struct aggregate because
-# (doc_id, pos) is unique.
+# RefinedWeb/FineWeb-style corpus-wide first-occurrence line dedup.
+# DuckDB replays the same first-occurrence choice via a row_number
+# window per line ordered by (doc, pos) — equivalent to the operator's
+# skew-safe min-struct aggregate because (doc_id, pos) is unique.
 @_register(
     "dedup_lines",
     """
@@ -3330,11 +3322,10 @@ def _q_dedup_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# C4-style heuristic cleaning (Raffel et al. 2020 §2.2; round 6,
-# registers past the graded window like the other round-6 queries).
-# DuckDB replays the identical line predicate with list_filter
-# lambdas; both engines split words on a single literal space and
-# drop empties, so counts agree exactly.
+# C4-style heuristic cleaning (Raffel et al. 2020 §2.2). DuckDB replays
+# the identical line predicate with list_filter lambdas; both engines
+# split words on a single literal space and drop empties, so counts
+# agree exactly.
 @_register(
     "c4_filters",
     """
@@ -3374,13 +3365,13 @@ def _q_c4_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return T.c4_filters(docs, "text", "doc_id")
 
 
-# Deterministic content-defined corpus shuffle (round 6, past the
-# graded window). The md5 key and the range-bucketed shard
-# (floor(first16bits · n / 65536); for n=16 that is exactly the first
-# hex nibble) are both portable pure functions of (seed, id), so
-# DuckDB replays key and shard exactly; the physical ORDER itself is
-# invisible to the driver's sorted compare — layout-independence and
-# in-partition sortedness are property-tested in pytest instead.
+# Deterministic content-defined corpus shuffle. The md5 key and the
+# range-bucketed shard (floor(first16bits · n / 65536); for n=16 that is
+# exactly the first hex nibble) are both portable pure functions of
+# (seed, id), so DuckDB replays key and shard exactly; the physical
+# ORDER itself is invisible to the driver's sorted compare —
+# layout-independence and in-partition sortedness are property-tested in
+# pytest instead.
 @_register(
     "corpus_shuffle",
     """
@@ -3405,16 +3396,15 @@ def _q_corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return deterministic_shuffle(docs, "doc_id", seed=42, num_partitions=16)
 
 
-# WARC ingestion + HTML text extraction (round 6, past the graded
-# window). Each document is wrapped into a synthetic WARC response
-# record (HTTP head + HTML with head/style/script boilerplate), then
-# run through build_warc -> parse_warc -> html_to_text inside
-# mapInPandas — the Common Crawl ingestion path, driver-checkable
-# because the extraction is a pure function DuckDB can replay: the
-# parser's visible text reduces to the known block structure
-# ('\\n' + 'Doc <id>' + '\\n\\n' + text + '\\n'), per-line whitespace
-# collapse, and the blank-line squeeze (keep a blank iff the previous
-# raw line was non-blank and a non-blank follows).
+# WARC ingestion + HTML text extraction. Each document is wrapped into a
+# synthetic WARC response record (HTTP head + HTML with
+# head/style/script boilerplate), then run through build_warc ->
+# parse_warc -> html_to_text inside mapInPandas — the Common Crawl
+# ingestion path, driver-checkable because the extraction is a pure
+# function DuckDB can replay: the parser's visible text reduces to the
+# known block structure ('\\n' + 'Doc <id>' + '\\n\\n' + text + '\\n'),
+# per-line whitespace collapse, and the blank-line squeeze (keep a blank
+# iff the previous raw line was non-blank and a non-blank follows).
 @_register(
     "warc_html_extract",
     """
@@ -3551,13 +3541,13 @@ def _q_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# URL canonicalization + first-occurrence URL dedup (round 6, past
-# the graded window). URLs are synthesized per document with every
-# canonicalization hazard baked in (mixed-case scheme/host, default
-# port, tracking params, unsorted query, fragment); the oracle states
-# the EXPECTED canonical form directly — an independent formulation,
-# not a replay of the operator's regex chain — and replays the
-# first-per-key choice as a row_number window.
+# URL canonicalization + first-occurrence URL dedup. URLs are
+# synthesized per document with every canonicalization hazard baked in
+# (mixed-case scheme/host, default port, tracking params, unsorted
+# query, fragment); the oracle states the EXPECTED canonical form
+# directly — an independent formulation, not a replay of the operator's
+# regex chain — and replays the first-per-key choice as a row_number
+# window.
 @_register(
     "url_dedup",
     """
@@ -3592,12 +3582,12 @@ def _q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "canonical_url")
 
 
-# UT1-style domain blocklist gate (round 6, past the graded window):
-# synthetic per-doc hosts cycle through 5 domains; the 2-entry
-# blocklist must knock out exact matches AND subdomain matches
-# (ads.tracker.example.com via example.com, blog.sub.spam.net via
-# spam.net). The oracle replays the parent-domain chain with a list
-# comprehension over the split host and a correlated NOT EXISTS.
+# UT1-style domain blocklist gate: synthetic per-doc hosts cycle through
+# 5 domains; the 2-entry blocklist must knock out exact matches AND
+# subdomain matches (ads.tracker.example.com via example.com,
+# blog.sub.spam.net via spam.net). The oracle replays the parent-domain
+# chain with a list comprehension over the split host and a correlated
+# NOT EXISTS.
 @_register(
     "blocked_domains",
     """
@@ -3652,12 +3642,10 @@ def _q_blocked_domains(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# round-6 oracle widening: six operators that previously carried only
-# pytest evidence get driver-value-checkable oracles (registered past
-# the graded window for the round-7 rotation). Inputs are synthesized
-# deterministically from the testdata tables where the operator needs
-# structure the tables lack (multi-line docs, coordinates, typos,
-# snapshot series).
+# Oracles for six operators that previously carried only pytest
+# evidence. Inputs are synthesized deterministically from the testdata
+# tables where the operator needs structure the tables lack (multi-line
+# docs, coordinates, typos, snapshot series).
 # --------------------------------------------------------------------
 
 # C4 corpus-level boilerplate-line removal: every doc gains a footer
@@ -3958,15 +3946,15 @@ def _pagerank_oracle_sql(iters: int, d: float = 0.85) -> str:
     return "".join(parts)
 
 
-# Host-graph PageRank (round 6, past the graded window): the web-
-# curation quality signal (Common Crawl publishes host-level ranks;
-# corpus pipelines weight documents by them). Synthetic directed graph
-# from orders: src ∈ [0,150), dst ∈ [0,211) — nodes 150-210 have
-# in-edges but never out-edges, so the DANGLING-mass term is exercised
-# for real, not vacuously zero. 3 fixed iterations (no convergence
-# probe — replayable); both engines run the identical algebra, the
-# only engine freedom is double summation order, absorbed by the
-# 6-dp round on a ~1/361-scale quantity (the tfidf/unigram exposure).
+# Host-graph PageRank: the web-curation quality signal (Common Crawl
+# publishes host-level ranks; corpus pipelines weight documents by
+# them). Synthetic directed graph from orders: src ∈ [0,150), dst ∈
+# [0,211) — nodes 150-210 have in-edges but never out-edges, so the
+# DANGLING-mass term is exercised for real, not vacuously zero. 3 fixed
+# iterations (no convergence probe — replayable); both engines run the
+# identical algebra, the only engine freedom is double summation order,
+# absorbed by the 6-dp round on a ~1/361-scale quantity (the
+# tfidf/unigram exposure).
 @_register("host_pagerank", _pagerank_oracle_sql(3))
 def _q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gem_data_wrangle_spark.operators.graph import pagerank
@@ -3983,12 +3971,11 @@ def _q_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("node", F.round("rank", 6).alias("rank"))
 
 
-# Trailing 1-hour rolling sums over each user's event stream (round 6,
-# past the graded window): the RANGE BETWEEN INTERVAL frame both
-# engines define identically; the operator orders by exact integer
-# microseconds so the frame boundary can't drift through double
-# rounding. value is 2-dp data → the window sum rounds stably at 2 dp
-# (FIXTURES.md float policy).
+# Trailing 1-hour rolling sums over each user's event stream: the RANGE
+# BETWEEN INTERVAL frame both engines define identically; the operator
+# orders by exact integer microseconds so the frame boundary can't drift
+# through double rounding. value is 2-dp data → the window sum rounds
+# stably at 2 dp (FIXTURES.md float policy).
 @_register(
     "rolling_event_sums",
     """
@@ -4012,15 +3999,14 @@ def _q_rolling_event_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Sparse TF-IDF cosine document pairs (round 6, past the graded
-# window) — "related documents" without embeddings. Graded at
-# max_df_frac=1.0: the synthetic corpus's ~31-term CLOSED vocabulary
-# makes max_df pruning degenerate (every term is hot; any real frac
-# empties the vectors down to the 300 exact-dup pairs), so the
-# pruning contract is pytest-covered on constructed data instead.
+# Sparse TF-IDF cosine document pairs — "related documents" without
+# embeddings. Graded at max_df_frac=1.0: the synthetic corpus's ~31-term
+# CLOSED vocabulary makes max_df pruning degenerate (every term is hot;
+# any real frac empties the vectors down to the 300 exact-dup pairs), so
+# the pruning contract is pytest-covered on constructed data instead.
 # Cosine rounds to 4 dp on BOTH sides (the tfidf/unigram libm-ulp
-# exposure); the ≥0.6 membership filter carries the same
-# threshold-cut exposure lm_quality_cut runs green with.
+# exposure); the ≥0.6 membership filter carries the same threshold-cut
+# exposure lm_quality_cut runs green with.
 @_register(
     "cosine_pairs",
     """
@@ -4064,13 +4050,13 @@ def _q_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
 
 
-# Exact token-set Jaccard self-join via prefix filtering (round 6,
-# past the graded window) — the no-false-negatives complement to
-# minhash_lsh_pairs. The oracle replays the FULL algorithm (distinct
-# tokens → document frequency → rarity-ordered prefixes → prefix
-# equi-join + size filter → intersection count), and the J ≥ t
-# compare is pure integer arithmetic on both sides (q·inter ≥
-# p·(union)), so there is no float anywhere in the projection.
+# Exact token-set Jaccard self-join via prefix filtering — the
+# no-false-negatives complement to minhash_lsh_pairs. The oracle replays
+# the FULL algorithm (distinct tokens → document frequency →
+# rarity-ordered prefixes → prefix equi-join + size filter →
+# intersection count), and the J ≥ t compare is pure integer arithmetic
+# on both sides (q·inter ≥ p·(union)), so there is no float anywhere in
+# the projection.
 @_register(
     "exact_jaccard_pairs",
     """
@@ -4114,15 +4100,14 @@ def _q_exact_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact_jaccard_join(docs, "text", "doc_id", threshold=0.7)
 
 
-# φ-heavy-hitters with exact verified counts (round 6, past the
-# graded window). Key = o_orderkey % (o_custkey % 200 + 1) — a
-# Zipf-ish decay over 0..199 (small residues absorb every base), so
-# the 0.5%-of-rows floor admits a non-trivial prefix. FLOOR semantics
-# are tie-free by construction (no top-k boundary), so sketch
-# candidate ordering can't affect the result; the 200-value domain
-# keeps the sketch in its exact regime at every sf, which pytest's
-# truncated-pool guard test complements. Both sides floor the
-# threshold (Python int() == SQL floor() on positives).
+# φ-heavy-hitters with exact verified counts. Key = o_orderkey %
+# (o_custkey % 200 + 1) — a Zipf-ish decay over 0..199 (small residues
+# absorb every base), so the 0.5%-of-rows floor admits a non-trivial
+# prefix. FLOOR semantics are tie-free by construction (no top-k
+# boundary), so sketch candidate ordering can't affect the result; the
+# 200-value domain keeps the sketch in its exact regime at every sf,
+# which pytest's truncated-pool guard test complements. Both sides floor
+# the threshold (Python int() == SQL floor() on positives).
 @_register(
     "heavy_hitter_keys",
     """
@@ -4147,14 +4132,14 @@ def _q_heavy_hitter_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("hot_key", F.col("count").alias("n_rows"))
 
 
-# k-means assignment over the embeddings table (round 6, past the
-# graded window): centroids = the 4 lowest vec_ids, every vector
-# assigned to its nearest centroid by squared L2 (ties to the lowest
-# centroid id). Both engines compute the squared distance as a
-# sequential double sum in element order; the oracle replays the
-# argmin with a row_number window ordered (dist, cid). sq_dist itself
-# stays OUT of the oracled projection (float-representation hygiene —
-# same policy as audio RMS); pytest asserts it.
+# k-means assignment over the embeddings table: centroids = the 4 lowest
+# vec_ids, every vector assigned to its nearest centroid by squared L2
+# (ties to the lowest centroid id). Both engines compute the squared
+# distance as a sequential double sum in element order; the oracle
+# replays the argmin with a row_number window ordered (dist, cid).
+# sq_dist itself stays OUT of the oracled projection
+# (float-representation hygiene — same policy as audio RMS); pytest
+# asserts it.
 @_register(
     "kmeans_assign",
     """
@@ -4184,15 +4169,15 @@ def _q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Full distributed Lloyd k-means, 2 training iterations + final
-# scoring pass (round 6, past the graded window). The oracle unrolls
-# both iterations: assign (argmin via row_number over (sq_dist, cid))
-# → per-dimension mean by cluster (the M step) → reassign → M step →
-# score. Empty clusters carry the previous centroid forward on both
-# sides. sq_dist stays out of the oracled projection (float hygiene,
-# same policy as kmeans_assign); the per-dim means are double avgs
-# whose engine sum-order freedom is far below the argmin margins on
-# this corpus — pytest pins convergence behavior separately.
+# Full distributed Lloyd k-means, 2 training iterations + final scoring
+# pass. The oracle unrolls both iterations: assign (argmin via
+# row_number over (sq_dist, cid)) → per-dimension mean by cluster (the M
+# step) → reassign → M step → score. Empty clusters carry the previous
+# centroid forward on both sides. sq_dist stays out of the oracled
+# projection (float hygiene, same policy as kmeans_assign); the per-dim
+# means are double avgs whose engine sum-order freedom is far below the
+# argmin margins on this corpus — pytest pins convergence behavior
+# separately.
 @_register(
     "kmeans_lloyd",
     """
@@ -4275,11 +4260,11 @@ def _pq_seed_codebooks(emb, m: int = 4, ksub: int = 16) -> list:
     ]
 
 
-# Product quantization encode (Jégou et al. TPAMI 2011; round 6, past
-# the graded window): 64-dim vectors → 4 codes, codeword = nearest of
-# the 16 seed sub-vectors by squared L2 (first min on ties — both
-# engines order by (dist, cid)). Codes are small ints, hash-safe;
-# distances stay out of the projection (float hygiene, kmeans policy).
+# Product quantization encode (Jégou et al. TPAMI 2011): 64-dim vectors
+# → 4 codes, codeword = nearest of the 16 seed sub-vectors by squared L2
+# (first min on ties — both engines order by (dist, cid)). Codes are
+# small ints, hash-safe; distances stay out of the projection (float
+# hygiene, kmeans policy).
 _PQ_ASSIGN_SQL = """
     WITH v AS (
       SELECT vec_id, embedding::DOUBLE[] AS vv FROM embeddings
@@ -4313,7 +4298,7 @@ _PQ_ASSIGN_SQL = """
 
 # Graded projection is '-'-joined codes, NOT the raw list column: the
 # driver canonicalizer sorts with pandas and a LIST column is
-# unhashable there (CORRECTNESS_r07 err row). The operator still
+# unhashable there (it crashed the comparison). The operator still
 # returns array<int>; only the graded view flattens.
 @_register(
     "pq_encode",
@@ -4375,15 +4360,13 @@ def _q_pq_topk_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return V.pq_topk(codes, probes, books, "embedding", "vec_id", k=10)
 
 
-# Real WAV/PCM audio decode through the Arrow-batched feature path
-# (round 6; registers past the 50-query graded window — oracle ready
-# for the round-7 rotation, pytest covers it meanwhile). Payloads are
-# synthesized deterministically per document as 16-bit PCM built from
-# INTEGER sample values (no float rounding in the construction), so
-# DuckDB can replay the decode's integer-derived outputs exactly.
-# Every 7th doc gets a compressed (MP3) format tag to pin the
-# quarantine contract in the graded row. RMS is deliberately NOT in
-# the oracled projection: its float sum is summation-order-sensitive
+# Real WAV/PCM audio decode through the Arrow-batched feature path.
+# Payloads are synthesized deterministically per document as 16-bit PCM
+# built from INTEGER sample values (no float rounding in the
+# construction), so DuckDB can replay the decode's integer-derived
+# outputs exactly. Every 7th doc gets a compressed (MP3) format tag to
+# pin the quarantine contract in the graded row. RMS is deliberately NOT
+# in the oracled projection: its float sum is summation-order-sensitive
 # (numpy pairwise vs SQL sequential) — pytest covers it instead.
 @_register(
     "audio_features",
@@ -4453,13 +4436,13 @@ def _q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Unigram-LM mean log-probability (the CCNet-perplexity stand-in;
-# round 6, past the graded window). The oracle re-derives the corpus
-# frequency table and the add-½ smoothed per-token log-probability
-# independently; both sides round the operator's 6-dp mean again to
-# 4 dp (double-rounded on BOTH sides, so the projections are
-# structurally identical — the only engine freedom left is libm ln
-# ulps, the same exposure tfidf_top_terms carries green).
+# Unigram-LM mean log-probability (the CCNet-perplexity stand-in). The
+# oracle re-derives the corpus frequency table and the add-½ smoothed
+# per-token log-probability independently; both sides round the
+# operator's 6-dp mean again to 4 dp (double-rounded on BOTH sides, so
+# the projections are structurally identical — the only engine freedom
+# left is libm ln ulps, the same exposure tfidf_top_terms carries
+# green).
 @_register(
     "unigram_logprob",
     """
@@ -4488,10 +4471,10 @@ def _q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Okapi BM25 for a fixed 3-term query (round 6, past the graded
-# window). Terms are common corpus words so most documents score; the
-# oracle recomputes idf/tf/length-normalization from scratch. The
-# 3-addend score sum is permutation-insensitive at 4 dp.
+# Okapi BM25 for a fixed 3-term query. Terms are common corpus words so
+# most documents score; the oracle recomputes
+# idf/tf/length-normalization from scratch. The 3-addend score sum is
+# permutation-insensitive at 4 dp.
 @_register(
     "bm25_rank",
     """
@@ -4523,13 +4506,12 @@ def _q_bm25_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", F.round("bm25", 4).alias("bm25"))
 
 
-# CCNet-style perplexity cut (round 6, past the graded window): drop
-# the worst decile by mean token log-prob. The graded query pins
-# exact=True so DuckDB's quantile_cont replays the interpolated
-# cutoff (approx_percentile is the operator's scale-path default).
-# The >= compare is engine-stable: an interpolated cutoff either
-# equals an order statistic exactly (integral position or tied
-# neighbors — bit-identical in both engines) or lies strictly
+# CCNet-style perplexity cut: drop the worst decile by mean token
+# log-prob. The graded query pins exact=True so DuckDB's quantile_cont
+# replays the interpolated cutoff (approx_percentile is the operator's
+# scale-path default). The >= compare is engine-stable: an interpolated
+# cutoff either equals an order statistic exactly (integral position or
+# tied neighbors — bit-identical in both engines) or lies strictly
 # between two adjacent order statistics, where no score can sit.
 @_register(
     "lm_quality_cut",
@@ -4573,16 +4555,15 @@ def _md5_nibble_sum_sql(hx: str, nibbles: int) -> str:
     )
 
 
-# DSIR importance weights (Xie et al. 2302.03169; round 6, past the
-# graded window): target = the corpus's English slice, raw = the full
-# corpus; every raw doc scored by sum of hashed-unigram+bigram
-# log-ratios lambda_b = log p_b - log q_b (4096 md5 buckets, Laplace
-# smoothing). Float discipline (fixed after the CORRECTNESS_r07 hash
-# FAIL): lambda rounds to 6 dp (cross-engine stable), is scaled to
-# exact BIGINT micro-units lam_u = round(lam*1e6), and the per-doc
-# score is the EXACT integer sum(c*lam_u) divided by 1e6 ONCE — a
-# double F.sum fold was order-sensitive once the accumulator ulp
-# exceeded 1e-6, flipping the final 6-dp round between engines.
+# DSIR importance weights (Xie et al. 2302.03169): target = the corpus's
+# English slice, raw = the full corpus; every raw doc scored by sum of
+# hashed-unigram+bigram log-ratios lambda_b = log p_b - log q_b (4096
+# md5 buckets, Laplace smoothing). Float discipline (fixed after a
+# cross-engine hash mismatch): lambda rounds to 6 dp (cross-engine
+# stable), is scaled to exact BIGINT micro-units lam_u = round(lam*1e6),
+# and the per-doc score is the EXACT integer sum(c*lam_u) divided by 1e6
+# ONCE — a double F.sum fold was order-sensitive once the accumulator
+# ulp exceeded 1e-6, flipping the final 6-dp round between engines.
 _DSIR_GRAMS_SQL = """
     rt AS (
       SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents
@@ -4716,10 +4697,8 @@ def _q_training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# extensions added after the round-2 grading window was fixed: they
-# register past position 50 (ungraded this round by the driver's
-# 50-query cap) with oracles ready for next-round rotation; pytest
-# covers them meanwhile (tests/test_asof.py, test_extensions.py).
+# extensions: each carries an oracle; pytest covers them too
+# (tests/test_asof.py, test_extensions.py).
 # --------------------------------------------------------------------
 # as-of join: align each non-view event to the user's latest prior
 # 'view' value (backward inclusive) — DuckDB has native ASOF JOIN, the
@@ -4889,12 +4868,11 @@ def _q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# End-to-end near-duplicate REMOVAL (round 6, past the graded
-# window): the composed candidates → closure → keep-lowest-id →
-# left-anti materialization, value-checked over the full surviving
-# rows (every original document column). Oracle = the same recursive
-# reachability closure, final select flipped to the survivors joined
-# back to the corpus.
+# End-to-end near-duplicate REMOVAL: the composed candidates → closure →
+# keep-lowest-id → left-anti materialization, value-checked over the
+# full surviving rows (every original document column). Oracle = the
+# same recursive reachability closure, final select flipped to the
+# survivors joined back to the corpus.
 @_register(
     "neardup_dedup",
     _neardup_components_oracle(
@@ -5426,9 +5404,7 @@ def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# round-7 additions — five new first-class operators, registered
-# directly into the graded head (this round's rotation promotes all
-# round-6 strays, so new queries get immediate driver evidence).
+# five first-class operators
 # --------------------------------------------------------------------
 
 # Shannon character entropy + integer sufficient statistics. The float
@@ -5657,10 +5633,7 @@ def _q_event_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# round-7 batch 2 — OLAP grouping-set/reshape/quantile/cohort/sketch
-# primitives, registered past the graded window (the established
-# new-operator pattern: pytest + local oracle carry them until the
-# round-8 rotation).
+# OLAP grouping-set/reshape/quantile/cohort/sketch primitives
 # --------------------------------------------------------------------
 
 # ROLLUP grouping sets: per-(returnflag, linestatus) sums, per-flag
@@ -8200,10 +8173,9 @@ def _q_host_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Percentile-rank normalization (round 9, past the graded window —
-# round-10 rotation): exact ppm rank + decile bucket per event within
-# its type; RANK ties (equal cents) share outputs, so no invented
-# tie order. All integer floors.
+# Percentile-rank normalization: exact ppm rank + decile bucket per
+# event within its type; RANK ties (equal cents) share outputs, so no
+# invented tie order. All integer floors.
 @_register(
     "rank_normalized_values",
     """
@@ -8232,11 +8204,10 @@ def _q_rank_normalized_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("event_type", "event_id", "pr_ppm", "bucket")
 
 
-# Cross-corpus MinHash containment screening (round 9, past the
-# graded window — round-10 rotation): documents with doc_id % 11 == 3
-# play the held-out reference suite; every other document is screened
-# against it. k=16 slots, noise pruned at >= 4 matching slots; both
-# estimates are exact integer-ppm floors.
+# Cross-corpus MinHash containment screening: documents with
+# doc_id % 11 == 3 play the held-out reference suite; every other document is
+# screened against it. k=16 slots, noise pruned at >= 4 matching slots;
+# both estimates are exact integer-ppm floors.
 @_register(
     "containment_screen",
     """
@@ -8285,10 +8256,10 @@ def _q_containment_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Exponentially-weighted moving average (round 9, past the graded
-# window): alpha=1/2 truncated at 30 terms per event_type stream —
-# exact integer numerator/denominator, one decimal(38,0) floor
-# division; (ts, event_id) total order fixes the frame.
+# Exponentially-weighted moving average: alpha=1/2 truncated at 30 terms
+# per event_type stream — exact integer numerator/denominator, one
+# decimal(38,0) floor division; (ts, event_id) total order fixes the
+# frame.
 @_register(
     "ewma_event_values",
     """
@@ -8318,11 +8289,11 @@ def _q_ewma_event_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# BMP structural probe (round 9, past the graded window): the eighth
-# codec — builder synthesizes spec-conformant BITMAPFILEHEADER +
-# BITMAPINFOHEADER bytes from doc_id arithmetic, probe walks them
-# back; junk and mid-pixel truncations quarantine (headers survive a
-# cut at max(len/2, 54), so field parity stays checkable).
+# BMP structural probe: the eighth codec — the query synthesizes
+# spec-conformant BITMAPFILEHEADER + BITMAPINFOHEADER bytes from doc_id
+# arithmetic, probe walks them back; junk and mid-pixel truncations
+# quarantine (headers survive a cut at max(len/2, 54), so field parity
+# stays checkable).
 @_register(
     "bmp_metadata",
     """
@@ -8419,10 +8390,9 @@ def _benford_oracle_sql() -> str:
     """
 
 
-# Benford first-digit audit (round 9, past the graded window): the
-# distributional fabricated-feed detector over event values per type
-# — exact string-head digits, integer-ppm floors, nine shared
-# plan-time constants. All-integer parity.
+# Benford first-digit audit: the distributional fabricated-feed detector
+# over event values per type — exact string-head digits, integer-ppm
+# floors, nine shared plan-time constants. All-integer parity.
 @_register("benford_audit", _benford_oracle_sql())
 def _q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gem_data_wrangle_spark.operators.quality import benford_profile
@@ -8467,10 +8437,10 @@ def _cm_oracle_sql(width: int = 256, depth: int = 4) -> str:
     """
 
 
-# Count-Min point-frequency estimates (round 9, past the graded
-# window): width 256 x depth 4 over event user ids, estimated for
-# every distinct user — mergeable cells, min-over-lanes upper bound,
-# all-integer parity via the kmv md5-prefix hash discipline.
+# Count-Min point-frequency estimates: width 256 x depth 4 over event
+# user ids, estimated for every distinct user — mergeable cells,
+# min-over-lanes upper bound, all-integer parity via the kmv md5-prefix
+# hash discipline.
 @_register("cm_user_counts", _cm_oracle_sql(256, 4))
 def _q_cm_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gem_data_wrangle_spark.operators.sketches import (
@@ -8529,10 +8499,9 @@ def _weighted_pagerank_oracle_sql(iters: int, d: float = 0.85) -> str:
     return "".join(parts)
 
 
-# Weighted PageRank (round 9, past the graded window): link-count /
-# co-citation weights — surfer splits rank by edge weight share.
-# Same 3-iteration unrolled replay and 6-dp absorption as the uniform
-# host_pagerank (r08 green).
+# Weighted PageRank: link-count / co-citation weights — surfer splits
+# rank by edge weight share. Same 3-iteration unrolled replay and 6-dp
+# absorption as the uniform host_pagerank (r08 green).
 @_register("host_pagerank_weighted", _weighted_pagerank_oracle_sql(3))
 def _q_host_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gem_data_wrangle_spark.operators.graph import pagerank
@@ -8623,13 +8592,11 @@ def _q_fwf_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# extension: Unicode canonicalization (round 12; registers past the
-# 50-query graded window — pytest + the ready oracle carry it until
-# the round-13 rotation). The testdata is all-NFC already, so the
-# query INJECTS decomposed sequences deterministically (every 'e'
-# becomes e + COMBINING ACUTE U+0301) before normalizing — both
-# engines replay the injection, and the md5 over the recomposed text
-# only matches if Python unicodedata and DuckDB utf8proc agree
+# extension: Unicode canonicalization. The testdata is all-NFC already,
+# so the query INJECTS decomposed sequences deterministically (every 'e'
+# becomes e + COMBINING ACUTE U+0301) before normalizing — both engines
+# replay the injection, and the md5 over the recomposed text only
+# matches if Python unicodedata and DuckDB utf8proc agree
 # codepoint-for-codepoint on NFC.
 # --------------------------------------------------------------------
 @_register(
@@ -8658,14 +8625,14 @@ def _q_nfc_canonical_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------
-# extension: k-core decomposition (round 12; registers past the graded
-# window). The crawl-graph quality cut — pages in a dense core are
-# hub-endorsed, pendant chains/spam farms peel away. The graded form
-# runs a FIXED 3-round truncated peel (the pagerank fixed-iteration
-# oracle contract); the operator's default runs to the true fixpoint.
-# Oracle = the same 3 peels unrolled as plain CTE stages (degree agg +
-# NOT IN anti-joins per round). Node ranges are disjoint (customers
-# < 700, items >= 10000) so symmetrize-by-UNION can never collide.
+# extension: k-core decomposition. The crawl-graph quality cut —
+# pages in a dense core are hub-endorsed, pendant chains/spam farms peel
+# away. The graded form runs a FIXED 3-round truncated peel (the
+# pagerank fixed-iteration oracle contract); the operator's default runs
+# to the true fixpoint. Oracle = the same 3 peels unrolled as plain CTE
+# stages (degree agg + NOT IN anti-joins per round). Node ranges are
+# disjoint (customers < 700, items >= 10000) so symmetrize-by-UNION can
+# never collide.
 # --------------------------------------------------------------------
 @_register(
     "host_k_core",
@@ -8996,14 +8963,11 @@ def _q_image_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# End-to-end image near-dup REMOVAL map (registers at position 50 —
-# just past the graded window, which this round's rotation filled;
-# pytest + the local parity gate carry it until the r13 rotation, the
-# same path every past-window registration has taken). Composition:
-# dHash pairs → connected components → keep the min-id survivor per
-# component — the multimodal mirror of neardup_components. Oracle =
-# the dHash CTE body under WITH RECURSIVE + the same reachability
-# closure the text version uses.
+# End-to-end image near-dup REMOVAL map. Composition: dHash pairs →
+# connected components → keep the min-id survivor per component — the
+# multimodal mirror of neardup_components. Oracle = the dHash CTE body
+# under WITH RECURSIVE + the same reachability closure the text version
+# uses.
 @_register(
     "image_neardup_components",
     "WITH RECURSIVE"
@@ -9386,10 +9350,9 @@ def _q_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 # production shape (FAISS IVFPQ, flat-encoded variant): sign-grid
 # cells bound WHICH rows each probe scans (equi-join candidate
 # generation), PQ codes bound WHAT each scanned row costs (m LUT
-# lookups, m-int at-rest scan). Registered past the graded window
-# (position 51+); the oracle composes the similarity_ivf cell CTE
-# with the pq_topk_adc assignment/distance CTEs, so a promotion into
-# a future graded head is hash-ready. The seeded-KMeans + nprobe
+# lookups, m-int at-rest scan). The oracle composes the similarity_ivf
+# cell CTE with the pq_topk_adc assignment/distance CTEs. The
+# seeded-KMeans + nprobe
 # production quantizer is pytest territory (not SQL-replayable),
 # same split as similarity_ivf.
 # --------------------------------------------------------------------
@@ -9445,810 +9408,11 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q_agg_sum_groups(spark, "/root/testdata/sf0.001")
 
 
-# The driver value-checks the FIRST 50 entries of queries() (insertion
-# order). Round 1 graded registration positions 0-49 and left 50-69
-# unchecked — so this round rotates: queries already hash-matched in
-# CORRECTNESS_r01.json that are variants/trivial forms of still-listed
-# operators yield their slots to the previously unchecked tail (the 4
-# end-to-end GEM pipelines, the capstone, tfidf, profiling, salting,
-# splits, ...). Every demoted query remains registered and runnable;
-# its round-1 green row is the standing evidence.
-_DEFER_TO_TAIL = [
-    # ------------------------------------------------------------------
-    # round-6 rotation (VERDICT r5 item 1): the ENTIRE remaining stale
-    # block RETURNS to the graded head — the 15 r1-green queries
-    # (simhash, text_fingerprint, jaccard_neighbors,
-    # stream_sliding_window, cast_regex_extract, join_left_coalesce,
-    # join_fallback_chain, expand_years, case_when_classify,
-    # dedup_exact, text_quality, stream_tumbling_window, filter_isin,
-    # lang_id, multimodal_bytes) and the 11 r3-green queries
-    # (explode_split, split_ownership_strict, token_counts,
-    # harmonize_coordinates, join_left_enrich, surrogate_ids,
-    # minhash_lsh_pairs, stream_session_window, unique_assets,
-    # salted_aggregation, embedding_quantize_int8). After this round no
-    # query's newest green is older than round 4. The two rows-only ml
-    # queries (ml_minhash_join / ml_brp_join) are RETIRED from the
-    # registry outright (r5 What's-wrong item 1): their value evidence
-    # is the oracled *_verified derivatives (graded r5) plus
-    # tests/test_ml_lsh_crosscheck.py; every registered query is now
-    # driver-value-checkable.
-    #
-    # Queries that STAY in the graded head because round 6 changed
-    # their operators (ledger discipline: a deliberate operator change
-    # must re-promote/keep its queries): window_count_share +
-    # dedup_first_per_key (aggregates.py skew_safe select fix),
-    # repetition_signals (div0 guard) + gopher_quality_flags
-    # (max_scan_tokens cap) in textops.py, semdedup + shared_substring
-    # _pairs + normalized_dedup (dedup.py norm hoist / span additions),
-    # similarity_bruteforce/_lsh/_ivf + embedding_neardup_pairs
-    # (similarity.py norm hoist), the two new span queries
-    # (duplicate_spans / cut_duplicate_spans), agg_sum_groups (the
-    # flagship entry()), and the 8 GEM pipelines + both consolidations
-    # (end-to-end coverage).
-    #
-    # tail block 1 — ROTATED OUT round 12 (VERDICT r11 item 4): the
-    # entire r04-green block (agg_mean_groups, multimodal_features,
-    # filter_capacity_known, binational_split, canonical_projection,
-    # filter_notnull, filter_eq_timestamp, table_profile,
-    # group_quantiles, pivot_counts, rollup_sums, dataset_split,
-    # rolling_fingerprint, asof_join_events, range_join_prices,
-    # multimodal_resize, multimodal_frames, scrub_pii,
-    # bernoulli_sample, stream_interval_join, decontaminate_docs,
-    # json_extract_props — 22 queries, pins 8 rounds stale) plus the
-    # 9 oldest r05 pins below re-entered the graded head to re-anchor
-    # on a current driver grade; their slots come from demoting 33
-    # fresh r11 greens (tail block 7).
-    #
-    # tail block 2 — EMPTY since round 13 (VERDICT r12 item 2): the
-    # LAST r05-era pins (union_rows, union_rows_byname, string_format,
-    # window_rank, top_k, impute_year, strip_pct_suffix,
-    # expand_years_retirement, agg_global_mean, harmonize_na_poisoning,
-    # ml_minhash_join_verified, ml_brp_join_verified, stratified_sample,
-    # sample_to_token_budget, weighted_sample, tfidf_top_terms,
-    # chunk_documents, training_data_pipeline — 18 queries, plus the 7
-    # in the round-12 late blocks below) re-entered the graded head for
-    # a fresh driver grade, completing the VERDICT-r11-item-4 oldest-
-    # pin re-anchoring: after round 13 NO pin is older than r06. Their
-    # slots come from demoting 27 fresh r12 greens (tail block 8).
-    # sessionize_events RE-PROMOTED round 11: aggregates.sessionize
-    # session_idx widened int->long (width audit).
-    # ------------------------------------------------------------------
-    # round-7 rotation (VERDICT r6 item 1): the 30 round-6 registrations
-    # LEAVE the past-window parking list and enter the graded head (they
-    # had zero driver evidence); their head slots come from demoting the
-    # 37 r06-green queries below, each byte-stable this round
-    # (fingerprint-pinned). Two former tail entries RE-PROMOTE to the
-    # head because round 7 changed their operator paths (ledger
-    # discipline): stream_running_totals (stateful.running_totals now
-    # derives the key type from the schema) and neardup_components
-    # (graph.connected_components grew the checkpoint_dir strategy).
-    # repetition_signals also stays in the head (n-gram exchange
-    # reshape), as do the flagship agg_sum_groups and the 11
-    # reference-core pipeline/consolidation queries (kept fresh every
-    # round), plus the five round-7 registrations.
-    #
-    # The 20 LATER round-7 registrations (rollup_sum_groups,
-    # pivot_event_values, group_value_quantiles, cohort_retention,
-    # hll_distinct_counts, hll_union_rollup, rrf_hybrid_rank,
-    # impute_median, winsorized_values, pairwise_corr,
-    # value_histogram, zorder_keys, event_transitions, mp4_probe,
-    # salted_enrich, cube_sum_groups, table_checksum, orders_diff,
-    # mean_pool_embeddings, funnel_latency — batches 2-7 of the round;
-    # 20 in all) sit just PAST the graded window in
-    # registration order: pytest + their ready oracles (all green in
-    # the local full-registry sweep at sf0.001 and targeted sf0.01)
-    # carry them until the round-8 rotation, the same new-operator
-    # pattern every round has used.
-    #
-    # tail block 3 — r6-green, byte-unchanged since. ROUND-14 ROTATION
-    # (VERDICT r13 item 1): the r06 pin block became the oldest anchor
-    # (7+ rounds stale), so its FIRST 25 queries (filter_isin,
-    # cast_regex_extract, explode_split, split_ownership_strict,
-    # window_count_share, dedup_first_per_key, harmonize_coordinates,
-    # join_left_enrich, join_left_coalesce, join_fallback_chain,
-    # expand_years, case_when_classify, dedup_exact, text_fingerprint,
-    # text_quality, jaccard_neighbors, simhash, similarity_bruteforce,
-    # similarity_lsh, similarity_ivf, stream_tumbling_window,
-    # stream_sliding_window, stream_session_window, multimodal_bytes,
-    # embedding_neardup_pairs) re-enter the graded head for a fresh
-    # driver grade; their slots come from demoting 25 byte-stable r13
-    # greens (tail block 9 below). The remaining 8 r06 pins were
-    # promoted LATER THE SAME ROUND (round-14 rotation 2, tail block 10
-    # below) — the full 33-query r06 arc closes in r14 instead of the
-    # stated two-round fallback, so after this round NO pin is older
-    # than r07:
-    # surrogate_ids RE-PROMOTED round 9: kernels.surrogate_ids gained
-    # the persist() pin (ADVICE r9 high — two-action range-partition
-    # consistency), so its green needs refreshing.
-    # lang_id RE-PROMOTED round 11: textops.lang_id rebuilt as the
-    # script router (VERDICT r10 directive 8) with a regenerated
-    # oracle — the r06 green no longer covers it.
-    # minhash_lsh_pairs RE-PROMOTED round 13: minhash_band_signature's
-    # empty-shingle contract changed ('' -> NULL, the one-global-bucket
-    # fix) and the oracle gained the matching CASE — both sides of its
-    # fingerprint changed deliberately.
-    # semdedup RE-PROMOTED round 12: query fn gained the _spread
-    # single-partition fix (2.5 s -> 1.1 s at sf0.1).
-    # ------------------------------------------------------------------
-    # round-8 rotation (VERDICT r7 item 3): the 20 round-7
-    # registrations (rollup_sum_groups … mp4_probe, former positions
-    # 51-70) enter the graded head; their slots come from demoting the
-    # 20 r07-green rows below, each byte-stable this round. Kept in
-    # the head besides the promotions: the flagship + 11 reference-
-    # core pipeline rows (every round), and the three queries whose
-    # paths CHANGED this round and need driver re-grading —
-    # pq_encode (hashable projection), dsir_logweights + dsir_resample
-    # (integer micro-unit lambda sums). rrf_hybrid_rank and
-    # funnel_latency also changed (single-partition-exchange kills)
-    # and are in the promoted 20 anyway.
-    #
-    # tail block 4 — EMPTY since round 15 (VERDICT r14 item 4): the
-    # ENTIRE r07 pin block — the 20 r7-green rows parked here since
-    # round 8 (mixture_rebalance, dedup_lines, c4_filters,
-    # corpus_shuffle, warc_html_extract, url_dedup, blocked_domains,
-    # boilerplate_removal, geo_radius_join, fuzzy_match,
-    # resample_events, orders_upsert, scd2_history, rolling_event_sums,
-    # cosine_pairs, heavy_hitter_keys, kmeans_assign, kmeans_lloyd,
-    # unigram_logprob, char_entropy) plus the two round-8 mid-round
-    # demotions (script_fractions, event_zscores) — re-entered the
-    # graded head for a fresh driver grade, continuing the oldest-pin
-    # re-anchoring arc (r05 retired in r13, r06 in r14): after round
-    # 15 NO pin is older than r08. All 22 re-verified green at sf0.01
-    # via tools/check_parity.py before promotion. Their head slots
-    # come from demoting the 22 fresh r14 greens below (tail block
-    # 11).
-    # ------------------------------------------------------------------
-    # round-15 rotation (tail block 11): 22 r14-green rows demote
-    # under fingerprints to open slots for the r07 block above. Kept
-    # in the head besides the promotions: the flagship + the 11
-    # reference-core pipeline/consolidation rows (every round), the
-    # three embedding incremental-screen queries whose operator path
-    # changed this round (embedding_against_index gained the persisted-
-    # bucket geometry validation; embedding_incremental_multitable
-    # also moved to the plane_tables helper geometry), plus
-    # image_neardup_incremental / neardup_incremental (the streaming
-    # family's batch counterparts, graded alongside), similarity_
-    # bruteforce/lsh/ivf, salted_aggregation, harmonize_coordinates,
-    # stream_tumbling/session_window, shared_substring_pairs,
-    # duplicate_spans, cut_duplicate_spans, normalized_dedup.
-    "filter_isin",             # r14 green; cleaning filter path unchanged
-    "cast_regex_extract",      # r14 green; cleaning cast path unchanged
-    "explode_split",           # r14 green; strings explode path unchanged
-    # split_ownership_strict RE-PROMOTED round 17: kernels.split_
-    # ownership rebuilt expr-based (r17 construction-latency work).
-    "window_count_share",      # r14 green; aggregates window unchanged
-    "dedup_first_per_key",     # r14 green; aggregates dedup unchanged
-    "join_left_enrich",        # r14 green; joins enrich path unchanged
-    "join_left_coalesce",      # r14 green; joins coalesce unchanged
-    "join_fallback_chain",     # r14 green; joins fallback unchanged
-    # expand_years RE-PROMOTED round 17: kernels.expand_years rebuilt
-    # expr-based (r17 construction-latency work).
-    "case_when_classify",      # r14 green; conditional path unchanged
-    "dedup_exact",             # r14 green; dedup exact path unchanged
-    "text_fingerprint",        # r14 green; textops fingerprint unchanged
-    "text_quality",            # r14 green; textops quality unchanged
-    "jaccard_neighbors",       # r14 green; dedup jaccard unchanged
-    # simhash RE-PROMOTED round 17 (ADVICE r16): dedup.simhash was
-    # rewritten in r16 (single-aggregate bit fold) — its r14 green
-    # predates the operator change, so it re-enters the head.
-    "stream_sliding_window",   # r14 green; windows.py untouched in r15
-    "multimodal_bytes",        # r14 green; multimodal probe unchanged
-    # embedding_neardup_pairs RE-PROMOTED round 17: lsh_bucket (its
-    # bucket expression) rebuilt as one-parse literals (r17
-    # construction-latency work).
-    "token_counts",            # r14 green; textops token path unchanged
-    "embedding_quantize_int8", # r14 green; quantize path unchanged
-    "gopher_quality_flags",    # r14 green; textops gopher unchanged
-    # ------------------------------------------------------------------
-    # round-9 rotation (VERDICT r8 item 4): the 30 r8-green rows below
-    # demote under fingerprints; their slots go to the six round-8
-    # registrations (embedding_gram, ip_prefix_enrich,
-    # key_skew_profile, neardup_keep_best, temperature_mixture,
-    # temperature_resample_counts), the two new streaming mirrors
-    # (heavy_hitters_batch, socket_json_tumbling), re-promoted
-    # surrogate_ids, and this round's new registrations. Kept in the
-    # head besides those: flagship + the 11 reference-core rows
-    # (every round) and the queries whose graded projections or
-    # operator paths CHANGED in round 9 — dsir_logweights +
-    # dsir_resample (shared-SQL n_features cast), table_checksum,
-    # mean_pool_embeddings, pairwise_corr, event_transitions (type
-    # contract), funnel_latency (global_quantiles persist + driver
-    # finish), bloom_pruned_join (hash-type widening).
-    #
-    # tail block 5 — EMPTY since round 16 (VERDICT r15 item 1): the
-    # ENTIRE r08 pin block — the 26 rows parked here since round 9
-    # (stream_running_totals, cdc_chunks, host_pagerank, pq_encode,
-    # audio_features, bm25_rank, lm_quality_cut, repetition_signals,
-    # ngram_decontaminate, event_funnel, rollup_sum_groups,
-    # pivot_event_values, group_value_quantiles, cohort_retention,
-    # hll_distinct_counts, hll_union_rollup, cube_sum_groups,
-    # orders_diff, salted_enrich, rrf_hybrid_rank, impute_median,
-    # winsorized_values, value_histogram, zorder_keys, mp4_probe,
-    # mp4_sample_offsets) — re-entered the graded head for a fresh
-    # driver grade, the final step of the oldest-pin re-anchoring arc
-    # (r05 retired in r13, r06 in r14, r07 in r15): after round 16 NO
-    # pin is older than r10. All 26 re-verified green at sf0.01 via
-    # tools/check_parity.py before promotion. Their head slots come
-    # from demoting the 26 fresh r15 greens below (tail block 12).
-    # Historical re-promotions out of this block while it existed:
-    # exact_jaccard_pairs (r11, count-width widening), pq_topk_adc
-    # (r12, _spread fix), neardup_components (r13, minhash
-    # empty-shingle contract), neardup_dedup (r12, repartition fix).
-    # ------------------------------------------------------------------
-    # round-11 rotation (VERDICT r10 directive 1, carried from r9): the
-    # 7 registrations that sat past the graded window since round 9 —
-    # benford_audit, bmp_metadata, cm_user_counts, containment_screen,
-    # ewma_event_values, host_pagerank_weighted, rank_normalized_values
-    # — finally enter the graded head, together with the four
-    # re-promotions above (lang_id, exact_jaccard_pairs,
-    # pack_documents, sessionize_events — their operator paths changed
-    # this round). Slots come from the 11 r10-green demotions below;
-    # none of their query fns, oracles, or operator paths are touched
-    # by round 11's changes (the round's operator edits are
-    # gif/tiff probes, benford_profile, simhash_candidate_pairs,
-    # kmv_intersect_estimate, scd2_lookup, exact_jaccard_join,
-    # pack_documents, sessionize, lang_id, country_codes — every query
-    # over those paths either stays in or re-enters the head).
-    #
-    # tail block 6 — r10-green, byte-unchanged since:
-    "dsir_logweights",         # r10 green; sampling DSIR path unchanged
-    "dsir_resample",           # r10 green; sampling DSIR path unchanged
-    "table_checksum",          # r10 green; quality checksum unchanged
-                               # (r11 quality.py edit is benford-only)
-    "funnel_latency",          # r10 green; aggregates funnel/quantile
-                               # path unchanged (r11 edit: sessionize)
-    "mean_pool_embeddings",    # r10 green; similarity pooling unchanged
-    "pairwise_corr",           # r10 green; stats.py unchanged
-    "event_transitions",       # r10 green; aggregates transitions unchanged
-    "temperature_mixture",     # r10 green; sampling temperature unchanged
-    "temperature_resample_counts",  # r10 green; same path
-    "ip_prefix_enrich",        # r10 green; joins prefix path unchanged
-    "embedding_gram",          # r10 green; similarity gram path unchanged
-    # ------------------------------------------------------------------
-    # round-12 rotation (VERDICT r11 item 4): the 33 r11-green rows
-    # below demote under fingerprints; their slots go to the 31
-    # oldest-pin re-anchors (the whole r04 block + 9 r05 pins, see
-    # tail blocks 1-2), re-promoted neardup_dedup (repartition fix),
-    # and the new fwf_roundtrip_orders registration. Kept in the head
-    # besides those: flagship + the 11 reference-core rows (every
-    # round), lang_id (round-12 router breadth), simhash_pairs
-    # (materialize/checkpoint_dir params), gif_metadata + exif_probe
-    # (programmatic probe schemas), neardup_keep_best (repartition
-    # fix). None of the 33 below have query fns, oracles, or operator
-    # paths touched by round 12's changes (fwf source, lang tables,
-    # probe schema construction, simhash wrapper, neardup query fns,
-    # country-dim guard).
-    #
-    # tail block 7 — r11-green, byte-unchanged since:
-    # surrogate_ids RE-PROMOTED round 17 (ADVICE r16): kernels.
-    # surrogate_ids gained the materialize/localCheckpoint input
-    # truncation in r16 — its r11 green predates the operator change.
-    "exact_jaccard_pairs",     # r11 green; ppjoin path unchanged
-    "sessionize_events",       # r11 green; aggregates sessionize unchanged
-    "pack_documents",          # r11 green; sampling pack path unchanged
-    "bloom_pruned_join",       # r11 green; joins bloom path unchanged
-    "key_skew_profile",        # r11 green; skew profile unchanged
-    "heavy_hitters_batch",     # r11 green; stateful mirror unchanged
-    "socket_json_tumbling",    # r11 green; streaming mirror unchanged
-    "host_triangles",          # r11 green; graph triangles unchanged
-    "sketch_quantiles",        # r11 green; sketches quantile unchanged
-    "constraint_report",       # r11 green; quality constraints unchanged
-    "windowed_distinct_users", # r11 green; streaming mirror unchanged
-    "event_cooccurrence",      # r11 green; aggregates path unchanged
-    "incremental_daily_totals",# r11 green; incremental path unchanged
-    "privacy_audit",           # r11 green; textops pii path unchanged
-    "golden_user_profile",     # r11 green; quality golden path unchanged
-    "doc_readability",         # r11 green; readability path unchanged
-    "kn_doc_scores",           # r11 green; lm kn path unchanged
-    "scd2_segment_lookup",     # r11 green; asof scd2 path unchanged
-    "conversion_attribution",  # r11 green; asof attribution unchanged
-    "kmv_distinct_users",      # r11 green; sketches kmv path unchanged
-    "kmv_segment_overlap",     # r11 green; sketches kmv path unchanged
-    "mad_outlier_flags",       # r11 green; stats mad path unchanged
-    "host_communities",        # r11 green; graph labelprop unchanged
-    # jl_sketch RE-PROMOTED round 17: jl_project sign-matrix literals
-    # rebuilt as one-parse arrays (r17 construction-latency work).
-    "host_assortativity",      # r11 green; graph assortativity unchanged
-    "rank_normalized_values",  # r11 green; stats rank path unchanged
-    "containment_screen",      # r11 green; dedup containment unchanged
-    "ewma_event_values",       # r11 green; asof ewma path unchanged
-    "bmp_metadata",            # r11 green; bmp codec unchanged
-    "benford_audit",           # r11 green; quality benford unchanged
-    "cm_user_counts",          # r11 green; sketches cm path unchanged
-    "host_pagerank_weighted",  # r11 green; graph pagerank unchanged
-    #
-    # round-12 late rotations: the 7 r05 pins that parked here
-    # (project, filter_not_and, filter_null_or_ge, replace_value_global,
-    # distinct_rows, join_lookup_dim, split_ownership_equal) re-entered
-    # the graded head in ROUND 13 with the rest of the r05-era block
-    # (tail block 2 note above) — the re-anchor rotation they were
-    # explicitly queued for.
-    # ------------------------------------------------------------------
-    # round-13 rotation (VERDICT r12 items 1+2): image_neardup_components
-    # (the round-12 capstone, previously position 51 — the only
-    # registered query with no driver row anywhere) and the 25
-    # remaining r05-era pins enter the graded head, together with the
-    # new rle_compression_bound registration (VERDICT r12 item 5).
-    # Slots come from the 27 r12-green demotions below — every one
-    # graded green THIS past round, so each pin is as fresh as a pin
-    # can be. Kept in the head besides the promotions (FINAL state
-    # after the round's mid/late rotations below — an earlier draft of
-    # this paragraph listed 8 keepers, five of which later yielded
-    # their slots): flagship + the 11 reference-core rows (every
-    # round), the queries whose operator paths round 13 CHANGED
-    # (fwf_roundtrip_orders — fwf skip_blank_lines + atexit cleanup;
-    # host_k_core — max_iter guard; host_hits — allow_wide overflow
-    # guard; neardup_dedup + the three minhash re-promotions — the
-    # empty-shingle NULL fix; image_neardup_pairs +
-    # image_neardup_components — the _packed_bands refactor).
-    # lang_id, pq_topk_adc, semdedup, nfc_canonical_hashes,
-    # simhash_pairs, and image_dhash_hashes ride fresh r12 pins
-    # instead (late blocks below) — their slots went to the round's
-    # FIVE new registrations and the three minhash re-promotions.
-    #
-    # tail block 8 — r12-green, byte-unchanged since:
-    "agg_mean_groups",         # r12 green; aggregates mean path unchanged
-    "multimodal_features",     # r12 green; multimodal feature path unchanged
-    "filter_capacity_known",   # r12 green; cleaning.py:63 unchanged
-    "binational_split",        # r12 green; kernels.py:165 unchanged
-    "canonical_projection",    # r12 green; cleaning projection unchanged
-    "filter_notnull",          # r12 green; cleaning.py:90 unchanged
-    "filter_eq_timestamp",     # r12 green; query-local parse, unchanged
-    "table_profile",           # r12 green; quality profile unchanged
-    "group_quantiles",         # r12 green; quantile path unchanged
-    "pivot_counts",            # r12 green; query-local pivot, unchanged
-    "rollup_sums",             # r12 green; query-local rollup, unchanged
-    "dataset_split",           # r12 green; sampling split path unchanged
-    "rolling_fingerprint",     # r12 green; textops fingerprint unchanged
-    "asof_join_events",        # r12 green; asof join path unchanged
-    "range_join_prices",       # r12 green; asof range path unchanged
-    "multimodal_resize",       # r12 green; multimodal resize unchanged
-    "multimodal_frames",       # r12 green; multimodal frames unchanged
-    "bernoulli_sample",        # r12 green; sampling bernoulli unchanged
-    "stream_interval_join",    # r12 green; streaming interval unchanged
-    "scrub_pii",               # r12 green; textops pii path unchanged
-    "decontaminate_docs",      # r12 green; dedup ngram decon unchanged
-    "json_extract_props",      # r12 green; jsonops path unchanged
-    # neardup_keep_best NOT demoted after all (round-13 mid-round): the
-    # minhash_band_signature empty-shingle change is on its operator
-    # path, so it stays in the head for a fresh grade.
-    "exif_probe",              # r12 green; tiff_exif probe unchanged
-    "gif_metadata",            # r12 green; gif codec unchanged (the
-                               # VERDICT-r12-item-1 suggested demotion)
-    "audio_frame_energy",      # r12 green; multimodal audio unchanged
-    "vad_speech_segments",     # r12 green; multimodal vad unchanged
-    #
-    # round-13 late rotation: one more byte-stable r12 green yields its
-    # slot so the operator ADDED this round (neardup_against_index /
-    # the neardup_incremental query) grades THIS round instead of
-    # parking — the same new-operator pattern every round has used.
-    "nfc_canonical_hashes",    # r12 green; normalize_documents unchanged
-    #
-    # round-13 mid-round rotation: the differential-fuzz finding
-    # (minhash empty-shingle '' bucket) changed minhash_band_signature,
-    # so minhash_lsh_pairs / neardup_keep_best / neardup_components
-    # re-enter the head; these three byte-stable r12 greens yield the
-    # slots (none of their query fns, oracles, or operator paths are
-    # touched by the minhash change — lang_id is pure textops, and the
-    # two similarity queries ride pq/grid paths, not minhash).
-    "lang_id",                 # r12 green; script router unchanged
-    "pq_topk_adc",             # r12 green; pq path unchanged (r12 _spread
-                               # fix lives in its query fn, graded r12)
-    "semdedup",                # r12 green; grid path unchanged (same)
-    #
-    # round-13 late rotation 2: one more byte-stable r12 green yields
-    # its slot so the second operator ADDED this round
-    # (hamming_against_index / image_neardup_incremental) grades this
-    # round. simhash_candidate_pairs does NOT ride packed_hamming_pairs
-    # (it owns its own band explode — verified by source scan), so the
-    # round-13 _packed_bands refactor never touches its path.
-    # simhash_pairs RE-PROMOTED round 17 (ADVICE r16): r16 rewrote
-    # dedup.simhash (the signature expression on its path) — the r12
-    # green predates the change.
-    #
-    # round-13 late rotation 3: the FIFTH new registration
-    # (embedding_against_index / embedding_neardup_incremental — the
-    # embedding member of the incremental family) takes the last
-    # byte-stable r12 green's slot; multimodal.image_dhash is
-    # untouched this round (the _packed_bands refactor lives in
-    # dedup.py), and the capstone + pairs queries that consume dHash
-    # remain in the head for their own grades.
-    "image_dhash_hashes",      # r12 green; image_dhash path unchanged
-    # ------------------------------------------------------------------
-    # round-14 rotation (VERDICT r13 item 1): the 25 r13-green rows
-    # below demote under fingerprints; their slots go to the 25 oldest
-    # r06 pins re-entering the graded head (see the tail-block-3 note
-    # above). Kept in the head besides the promotions: flagship + the
-    # 11 reference-core rows (every round), and the three incremental-
-    # screen queries whose operator paths round 14 CHANGES
-    # (neardup_incremental / image_neardup_incremental /
-    # embedding_neardup_incremental — the materialize= persisted-
-    # signature contract, VERDICT r13 item 4 + ADVICE r13), plus
-    # minhash_lsh_pairs / neardup_components / neardup_dedup /
-    # neardup_keep_best / fwf_roundtrip_orders / host_k_core /
-    # host_hits / image_neardup_pairs / image_neardup_components /
-    # rle_compression_bound, whose r13 greens are fresh enough that
-    # another head round costs nothing while the r06 block drains.
-    #
-    # tail block 9 — r13-green, byte-unchanged since:
-    "project",                 # r13 green; cleaning projection unchanged
-    "filter_not_and",          # r13 green; cleaning.py:56 unchanged
-    "filter_null_or_ge",       # r13 green; cleaning.py:98 unchanged
-    "replace_value_global",    # r13 green; cleaning.py:105 unchanged
-    # split_ownership_equal RE-PROMOTED round 17: kernels.split_
-    # ownership rebuilt expr-based (r17 construction-latency work).
-    "join_lookup_dim",         # r13 green; joins.py:41 + country dim unchanged
-    "union_rows",              # r13 green; aggregates union path unchanged
-    "distinct_rows",           # r13 green; aggregates distinct unchanged
-    "string_format",           # r13 green; strings format path unchanged
-    "window_rank",             # r13 green; query-local window, unchanged
-    "top_k",                   # r13 green; aggregates top-k unchanged
-    "impute_year",             # r13 green; cleaning.py:115 unchanged
-    "strip_pct_suffix",        # r13 green; strings.py:80 unchanged
-    "union_rows_byname",       # r13 green; aggregates union path unchanged
-    # expand_years_retirement RE-PROMOTED round 17: same expand_years
-    # rebuild.
-    "agg_global_mean",         # r13 green; aggregates.py:39 unchanged
-    # harmonize_na_poisoning RE-PROMOTED round 17: kernels.harmonize_
-    # coordinates rebuilt expr-based (r17 construction-latency work).
-    "tfidf_top_terms",         # r13 green; textops tfidf path unchanged
-    # ml_minhash_join_verified RE-PROMOTED round 17 (ADVICE r16): its
-    # query fn calls lsh_candidate_pairs directly (the r16-changed
-    # lifecycle) — the r13 green predates the change.
-    "ml_brp_join_verified",    # r13 green; ml_lsh path unchanged
-    "training_data_pipeline",  # r13 green; sampling/textops paths unchanged
-    "stratified_sample",       # r13 green; sampling stratified unchanged
-    "sample_to_token_budget",  # r13 green; sampling budget path unchanged
-    "chunk_documents",         # r13 green; textops chunk path unchanged
-    "weighted_sample",         # r13 green; sampling weighted unchanged
-    # ------------------------------------------------------------------
-    # round-14 rotation 2: the LAST 8 r06 pins (salted_aggregation,
-    # token_counts, shared_substring_pairs, duplicate_spans,
-    # cut_duplicate_spans, gopher_quality_flags, embedding_quantize_
-    # int8, normalized_dedup — all 8 re-verified green at sf0.01 before
-    # promotion) enter the graded head, completing the r06 re-anchoring
-    # arc in ONE round. Their slots come from demoting 8 of the 10
-    # r13-fresh rows the first round-14 rotation had kept "because
-    # another head round costs nothing" — that reasoning inverts once
-    # the alternative is a 7-round-old pin. Kept in the head: the three
-    # incremental-screen queries (operator paths changed again this
-    # round — LEFT SEMI verify + signature-index support) plus the new
-    # embedding_incremental_sig registration, rle_compression_bound
-    # (cheap row), flagship + the 11 reference-core rows.
-    #
-    # tail block 10 — r13-green, byte-unchanged since:
-    # minhash_lsh_pairs / neardup_dedup / neardup_components /
-    # neardup_keep_best RE-PROMOTED round 17 (ADVICE r16): r16 gave
-    # lsh_candidate_pairs the persist/eager-checkpoint lifecycle (all
-    # four ride it, default materialize=True) — their r13 greens
-    # predate the operator change.
-    "host_k_core",             # r13 green; graph.py untouched in r14
-    "host_hits",               # r13 green; graph.py untouched in r14
-    # image_neardup_pairs / image_neardup_components RE-PROMOTED round
-    # 17 (ADVICE r16): r16 gave packed_hamming_pairs the same
-    # lifecycle and re-fingerprinted the components fn in place —
-    # both re-enter the head for a fresh driver grade.
-    "fwf_roundtrip_orders",    # r13 green; sources/io fixed-width path
-                               # unchanged in r14 — demoted to give the
-                               # round-14 registration (embedding_
-                               # incremental_sig, the persisted-
-                               # signature screen path) its head slot
-    "rle_compression_bound",   # r13 green; textops rle path unchanged
-                               # in r14 — demoted to give the second
-                               # round-14 registration (embedding_
-                               # incremental_multitable, the OR-
-                               # amplification contract) its head slot
-    # ------------------------------------------------------------------
-    # round-16 rotation (tail block 12): 26 r15-green rows demote
-    # under fingerprints to open slots for the r08 block above (tail
-    # block 5 note). Kept in the head besides the promotions: the
-    # flagship + the 11 reference-core pipeline/consolidation rows
-    # (every round), similarity_ivf (its registered query CHANGED this
-    # round — rank cast to long, VERDICT r15 item 6 — so its prior
-    # green is void), the five incremental-screen queries (the screen
-    # family gained geometry-sidecar validation + the compaction-
-    # window fix this round; their batch *_against_index inputs are
-    # the family's contract surface), similarity_bruteforce/lsh
-    # (similarity.py gained provision_embedding_screen beside
-    # plane_tables), stream_tumbling/session_window (the streaming
-    # family's other graded members), salted_aggregation,
-    # agg_sum_groups, harmonize_coordinates (the bench-tenancy rows
-    # VERDICT r15 tracked across rounds — kept graded so their
-    # correctness stays anchored while their walls are watched).
-    # Demoted: the 22 rows of the r07 arc re-anchored fresh in r15
-    # plus 4 double-anchored (r14+r15 green, byte-unchanged) span/
-    # dedup rows.
-    "mixture_rebalance",       # r15 green; sampling mixture path unchanged
-    "dedup_lines",             # r15 green; textops line-dedup unchanged
-    "c4_filters",              # r15 green; textops c4 path unchanged
-    "corpus_shuffle",          # r15 green; textops shuffle path unchanged
-    "warc_html_extract",       # r15 green; textops html path unchanged
-    "url_dedup",               # r15 green; dedup url path unchanged
-    "blocked_domains",         # r15 green; textops domain path unchanged
-    "boilerplate_removal",     # r15 green; textops boilerplate unchanged
-    "geo_radius_join",         # r15 green; joins geo path unchanged
-    "fuzzy_match",             # r15 green; joins fuzzy path unchanged
-    "resample_events",         # r15 green; aggregates resample unchanged
-    "orders_upsert",           # r15 green; quality upsert path unchanged
-    "scd2_history",            # r15 green; quality scd2 path unchanged
-    "rolling_event_sums",      # r15 green; aggregates rolling unchanged
-    "cosine_pairs",            # r15 green; similarity pair path unchanged
-    "heavy_hitter_keys",       # r15 green; aggregates heavy-hitter unchanged
-    "kmeans_assign",           # r15 green; similarity kmeans unchanged
-    "kmeans_lloyd",            # r15 green; similarity lloyd unchanged
-    "unigram_logprob",         # r15 green; textops unigram path unchanged
-    "char_entropy",            # r15 green; textops entropy unchanged
-    "script_fractions",        # r15 green; textops script path unchanged
-    "event_zscores",           # r15 green; aggregates zscore unchanged
-    # shared_substring_pairs / duplicate_spans / cut_duplicate_spans
-    # RE-PROMOTED round 17: the spans family gained the fingerprint
-    # materialize lifecycle (50x A/B evidence, OPTIMIZATION_r17.md).
-    "normalized_dedup",        # r14+r15 green; dedup normalized unchanged
-    # ------------------------------------------------------------------
-    # round-17 rotation (ADVICE r16 item 1): the TEN queries whose
-    # operator paths round 16 changed but whose greens predated the
-    # change (simhash, simhash_pairs, surrogate_ids, minhash_lsh_pairs,
-    # neardup_dedup, neardup_components, neardup_keep_best,
-    # ml_minhash_join_verified, image_neardup_pairs,
-    # image_neardup_components — the ledger rule "a deliberate operator
-    # change must re-promote its queries" was bypassed in r16) re-enter
-    # the graded head, together with ivfpq_topk (registered at position
-    # 50 since r16 — benched but never driver-graded). Slots come from
-    # demoting the 11 byte-stable r16 greens below: all graded green in
-    # CORRECTNESS_r16, their operator paths (aggregates/sketches OLAP,
-    # quality diff, skew enrich, rank fusion, stats impute) untouched
-    # by the r16 optimization commits and by round 17 (whose code
-    # changes live in dedup.py lifecycles, kernels/gem construction,
-    # session/country_codes hygiene).
-    #
-    # tail block 13 — r16-green, byte-unchanged since:
-    "rollup_sum_groups",       # r16 green; aggregates rollup unchanged
-    "pivot_event_values",      # r16 green; aggregates pivot unchanged
-    "group_value_quantiles",   # r16 green; aggregates quantile unchanged
-    "cohort_retention",        # r16 green; aggregates cohort unchanged
-    "hll_distinct_counts",     # r16 green; sketches hll unchanged
-    "hll_union_rollup",        # r16 green; sketches hll unchanged
-    "cube_sum_groups",         # r16 green; aggregates cube unchanged
-    "orders_diff",             # r16 green; quality diff unchanged
-    "salted_enrich",           # r16 green; skew enrich unchanged
-    "rrf_hybrid_rank",         # r16 green; rank-fusion path unchanged
-    "impute_median",           # r16 green; stats impute unchanged
-    # round-17 rotation part 2 (the kernels.py expr rebuild): five
-    # more byte-stable r16 greens demote so the five kernel-riding
-    # tail pins above (expand_years, expand_years_retirement,
-    # split_ownership_equal, split_ownership_strict,
-    # harmonize_na_poisoning) can re-enter the graded head; none of
-    # the five below ride kernels.py, plans/gem.py, or any other file
-    # round 17 touches.
-    "value_histogram",         # r16 green; stats histogram unchanged
-    "winsorized_values",       # r16 green; stats winsorize unchanged
-    "zorder_keys",             # r16 green; z-order path unchanged
-    "mp4_probe",               # r16 green; mp4 probe unchanged
-    "event_funnel",            # r16 green; aggregates funnel unchanged
-    # round-17 rotation part 3 (the similarity literal-construction
-    # rebuild): two more byte-stable r16 greens demote so the two
-    # similarity-riding tail pins above (embedding_neardup_pairs,
-    # jl_sketch) can re-enter the graded head; neither row below
-    # rides similarity.py or any other r17-touched file.
-    "lm_quality_cut",          # r16 green; ml_quality path unchanged
-    "bm25_rank",               # r16 green; textops bm25 path unchanged
-    # round-17 rotation part 4 (the spans-family materialize
-    # lifecycle): three more byte-stable r16 greens demote so the
-    # three spans tail pins above re-enter the graded head; none of
-    # the rows below ride dedup.py or any other r17-touched file.
-    "stream_running_totals",   # r16 green; stateful mirror unchanged
-    "cdc_chunks",              # r16 green; cdc rolling-hash unchanged
-    "host_pagerank",           # r16 green; graph pagerank unchanged
-]
-
-
-def _defer_fingerprint(name: str) -> str:
-    """sha256 (truncated) of a deferred query's registered function
-    source + oracle SQL. A deferred query's green CORRECTNESS row from
-    an earlier round is only valid while the query is byte-stable, so
-    every _DEFER_TO_TAIL entry records its fingerprint in
-    _DEFER_HASHES and tests/test_registry.py asserts the match —
-    silent drift out of the verified state fails CI and forces the
-    query back into the graded head (ADVICE r2). The hash covers the
-    query fn + oracle, not transitively-called operator modules; a
-    deliberate operator change must re-promote its queries (as round 3
-    did for surrogate_ids after the kernels.py two-phase rewrite)."""
-    import hashlib  # noqa: PLC0415
-    import inspect  # noqa: PLC0415
-
-    src = inspect.getsource(_QUERIES[name])
-    return hashlib.sha256(
-        (src + "\n---\n" + _ORACLES.get(name, "")).encode()
-    ).hexdigest()[:16]
-
-
-# Regenerate via tools/gen_defer_hashes.py after a DELIBERATE change.
-_DEFER_HASHES: dict[str, str] = {
-    "filter_isin": "511530f2dd36c7e8",
-    "cast_regex_extract": "caf35822ececbacf",
-    "explode_split": "68ee199b5c3da537",
-    "window_count_share": "2b80f335c6badb80",
-    "dedup_first_per_key": "6599421550ed8cba",
-    "join_left_enrich": "19d45dbe8ae4a9fc",
-    "join_left_coalesce": "b9994c429932914b",
-    "join_fallback_chain": "922fd078ac49f00d",
-    "case_when_classify": "0a9e17b051c21a23",
-    "dedup_exact": "f49df5544fb70089",
-    "text_fingerprint": "20401cde9270e27b",
-    "text_quality": "4ef6e6d2b0182197",
-    "jaccard_neighbors": "f5ef3b537b9359ad",
-    "stream_sliding_window": "d95ccf75fe6b6519",
-    "multimodal_bytes": "25c4f08bb9df8ba8",
-    "token_counts": "f224865fb01a4cee",
-    "embedding_quantize_int8": "c4a3a9970f58767f",
-    "gopher_quality_flags": "1a379aa526525ee1",
-    "dsir_logweights": "ebb9f288e36a91fd",
-    "dsir_resample": "ce3f2671c06d4dad",
-    "table_checksum": "5dbb220ec0db1106",
-    "funnel_latency": "4ef0f3a9bf77f4e3",
-    "mean_pool_embeddings": "a75f94eb19091cd5",
-    "pairwise_corr": "c9a43a6b470b9d1b",
-    "event_transitions": "fbd6aeb620761fda",
-    "temperature_mixture": "181354979c3f6ed2",
-    "temperature_resample_counts": "d23347ecc2e2f41e",
-    "ip_prefix_enrich": "a9d285f9724048fc",
-    "embedding_gram": "b3b6f238480c8422",
-    "exact_jaccard_pairs": "9dc493c25d0a3592",
-    "sessionize_events": "69f3c131133093cb",
-    "pack_documents": "98a0cb4c3d6e16e6",
-    "bloom_pruned_join": "becb6fa84157d4c2",
-    "key_skew_profile": "ad73e2f07a220746",
-    "heavy_hitters_batch": "bc15b0eba08df4a9",
-    "socket_json_tumbling": "6f447a6d99f9facb",
-    "host_triangles": "8f0bb23150c32714",
-    "sketch_quantiles": "23df92c25d5093c1",
-    "constraint_report": "a556795d55bc9eb3",
-    "windowed_distinct_users": "97265df1bf86d7a9",
-    "event_cooccurrence": "728622a0354ab914",
-    "incremental_daily_totals": "534080d29c986c89",
-    "privacy_audit": "84e70756d88f29af",
-    "golden_user_profile": "10503b273f0c1d9b",
-    "doc_readability": "8fd4386d13aae7c2",
-    "kn_doc_scores": "13f236eb52cf362e",
-    "scd2_segment_lookup": "6c12038f5e539559",
-    "conversion_attribution": "33a5547514440541",
-    "kmv_distinct_users": "b18a21f1837486e8",
-    "kmv_segment_overlap": "6df07e089f2a5f24",
-    "mad_outlier_flags": "02733d53d34a5797",
-    "host_communities": "cd9ccf9ade4f2269",
-    "host_assortativity": "d53f11bf66391508",
-    "rank_normalized_values": "5de27205a09af521",
-    "containment_screen": "940d438d0bd13566",
-    "ewma_event_values": "791d0049e24db254",
-    "bmp_metadata": "8feff782c801e074",
-    "benford_audit": "1db618b1b3fd9b51",
-    "cm_user_counts": "504e21175704528a",
-    "host_pagerank_weighted": "840dac2ebd01fc4d",
-    "agg_mean_groups": "e7a1b0a894570f0b",
-    "multimodal_features": "2dd56cda8d3e7dfd",
-    "filter_capacity_known": "aab9fdb471c09c7b",
-    "binational_split": "0106b38cea0954aa",
-    "canonical_projection": "0b33bf593746d7b2",
-    "filter_notnull": "c08d353a575704ff",
-    "filter_eq_timestamp": "57840d0b3d871c10",
-    "table_profile": "cf15317d3577ae7e",
-    "group_quantiles": "2bd4c8fd6a68b8ac",
-    "pivot_counts": "758d10e875c8c1a5",
-    "rollup_sums": "994df0003545be17",
-    "dataset_split": "1213d19a92e21ade",
-    "rolling_fingerprint": "ed5570e08c1351f7",
-    "asof_join_events": "12fc884cde6b1f3d",
-    "range_join_prices": "6f0b3a63a9d79b4f",
-    "multimodal_resize": "358cbd1a4f7b59af",
-    "multimodal_frames": "616d729fcef1f567",
-    "bernoulli_sample": "0353fe6e554dc1f6",
-    "stream_interval_join": "f1194af4ca44c50a",
-    "scrub_pii": "3fe7bd49f695b9b0",
-    "decontaminate_docs": "095d8d644c0a6ec0",
-    "json_extract_props": "6579bda1ad45617c",
-    "exif_probe": "e8a2930bc23e6571",
-    "gif_metadata": "a711f880d0147f09",
-    "audio_frame_energy": "4434e7fbe63a6cbd",
-    "vad_speech_segments": "45ec1fd5f33d511e",
-    "nfc_canonical_hashes": "1e62c611b707b8a3",
-    "lang_id": "e3fa4106cea5b370",
-    "pq_topk_adc": "788e74766b720596",
-    "semdedup": "7939e34ec09dc038",
-    "image_dhash_hashes": "ee7766169649c072",
-    "project": "e63d5078eaa99831",
-    "filter_not_and": "4a7cf2ba9409f9f2",
-    "filter_null_or_ge": "90ec3885d87582ea",
-    "replace_value_global": "0db49e1c90a3bb0c",
-    "join_lookup_dim": "2246a2f805501cff",
-    "union_rows": "f02c4badce8d2f6a",
-    "distinct_rows": "d6a3fb3ccb0f0551",
-    "string_format": "6c8675dbb4ccef03",
-    "window_rank": "cdb7d6d1b4fc17a6",
-    "top_k": "4df73fb64966eda0",
-    "impute_year": "616eb7efca0c1b13",
-    "strip_pct_suffix": "4c185c442ea859d1",
-    "union_rows_byname": "0f2175ebc647033b",
-    "agg_global_mean": "439642f02685e4bf",
-    "tfidf_top_terms": "bb616e4cb5b2c6da",
-    "ml_brp_join_verified": "f2cb8d58723dab33",
-    "training_data_pipeline": "db585891fb511fca",
-    "stratified_sample": "44bfd4171f2d4e82",
-    "sample_to_token_budget": "5639bb17630b5513",
-    "chunk_documents": "c721a1b87a97166d",
-    "weighted_sample": "033b26812c354655",
-    "host_k_core": "a0fba60216054f0d",
-    "host_hits": "8f4976b988d48f26",
-    "fwf_roundtrip_orders": "fc10a744e80a4548",
-    "rle_compression_bound": "c394175e5e623f0c",
-    "mixture_rebalance": "a924ac4be734b2b2",
-    "dedup_lines": "1d8dd7efa15d5c2b",
-    "c4_filters": "d4ba672cc63a30d1",
-    "corpus_shuffle": "498f9a902c697f08",
-    "warc_html_extract": "fb82769e81acaf1e",
-    "url_dedup": "6cb3dba4cc9af605",
-    "blocked_domains": "200bb5adbfa62c74",
-    "boilerplate_removal": "2a4b77933182a235",
-    "geo_radius_join": "7b531067dc4e2ab9",
-    "fuzzy_match": "b5177012dea3236e",
-    "resample_events": "cddcfd4a4ad51540",
-    "orders_upsert": "29a5b92bcbae58c6",
-    "scd2_history": "d9cf1f46bb22a4ba",
-    "rolling_event_sums": "1e79406768345463",
-    "cosine_pairs": "09cdbf0823e99566",
-    "heavy_hitter_keys": "105905576fbc9562",
-    "kmeans_assign": "69ea45029e82e5ae",
-    "kmeans_lloyd": "f515bf844f15167e",
-    "unigram_logprob": "4f08ba2fd892d53b",
-    "char_entropy": "fa742c81c635a692",
-    "script_fractions": "cd88eb613b5f1404",
-    "event_zscores": "84863b9d1f8c20a9",
-    "normalized_dedup": "04b35d9b9fb6d87b",
-    "rollup_sum_groups": "f0b9c84f2162f978",
-    "pivot_event_values": "8ae435e67eaa6ca9",
-    "group_value_quantiles": "ce15719932afd467",
-    "cohort_retention": "d62e7982606e8d41",
-    "hll_distinct_counts": "83c39be6f677a492",
-    "hll_union_rollup": "988da0536049b7a8",
-    "cube_sum_groups": "86597b37d33f11ca",
-    "orders_diff": "b3d032bb93945d89",
-    "salted_enrich": "afc4ca6466942d49",
-    "rrf_hybrid_rank": "b073978240fd0a6b",
-    "impute_median": "2d39e248a6626737",
-    "value_histogram": "aeb0ca2580b1fa91",
-    "winsorized_values": "6f5ed7de24c0f889",
-    "zorder_keys": "b1231593075ab8d4",
-    "mp4_probe": "f16a3127fb854d73",
-    "event_funnel": "51a9088efcd6bd51",
-    "lm_quality_cut": "3f00f63c7e5d0059",
-    "bm25_rank": "f3efe262fab2b30f",
-    "stream_running_totals": "807a5c69f29d2cb4",
-    "cdc_chunks": "c560bf74472dedb9",
-    "host_pagerank": "5719a32790ed687a",
-}
-
-
-# Round-7: EMPTY — the 30 round-6 registrations that parked here were
-# promoted into the graded head (VERDICT r6 item 1); the mechanism
-# stays for future rounds that register more than the graded window
-# can absorb.
-_REGISTERED_PAST_WINDOW: list[str] = []
-
-
-def _rotated(d: dict) -> dict:
-    deferred = [n for n in _DEFER_TO_TAIL if n in d]
-    late = [n for n in _REGISTERED_PAST_WINDOW if n in d]
-    skip = set(deferred) | set(late)
-    head = {k: v for k, v in d.items() if k not in skip}
-    return {
-        **head,
-        **{k: d[k] for k in late},
-        **{k: d[k] for k in deferred},
-    }
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _rotated(_QUERIES)
+    """Every registered query, in registration order."""
+    return dict(_QUERIES)
 
 
 def oracle_sql() -> dict[str, str]:
-    return _rotated(_ORACLES)
+    """The DuckDB oracle of every registered query, in registration order."""
+    return dict(_ORACLES)

@@ -50,7 +50,7 @@ HEADLINE = [
     "tfidf_top_terms",         # explode + 2 aggs + term join + window
     "gem_coal_pipeline",       # full reference pipeline end-to-end
     # round 2 additions — keep the original 14 above unchanged so
-    # per-query times stay comparable across BENCH_r{N}.json rounds
+    # per-query times stay comparable across rounds
     "gem_hydro_pipeline",      # equal-share variant end-to-end
     "gem_gasoil_pipeline",     # classification variant end-to-end
     "gem_total_consolidation", # union + surrogate ids + steel + EF chain

@@ -457,7 +457,7 @@ def shared_substring_pairs(
     plan runs the k-gram hash explode twice (three references in
     total) per action. The r16 A/B at 10× was noise-level; at 50× the
     explode dominates and the persist measures **11.3-12.0 s → 6.5-
-    7.8 s** (OPTIMIZATION_r17.md). The default persists the
+    7.8 s** (VERDICT.md, round-17 review). The default persists the
     fingerprints, eagerly truncates the (small: gated near-dup pairs
     only) output, and releases the cache — the simhash lifecycle.
     ``materialize=False`` keeps the lazy plan; ``checkpoint_dir``
@@ -545,9 +545,10 @@ def duplicate_spans(
     feeds BOTH the df-gate aggregate and the join, so a lazy plan runs
     the per-character hash explode twice per action. The r16 A/B at
     10× was noise-level; at 50× the explode dominates and the persist
-    measures **13.8-16.1 s → 6.8-8.7 s** (OPTIMIZATION_r17.md). The
-    default persists the fingerprints, eagerly truncates the (narrow:
-    one row per merged span) output, and releases the cache.
+    measures **13.8-16.1 s → 6.8-8.7 s** (VERDICT.md, round-17
+    review). The default persists the fingerprints, eagerly truncates
+    the (narrow: one row per merged span) output, and releases the
+    cache.
     ``materialize=False`` keeps the lazy plan; ``checkpoint_dir``
     selects the durable checkpoint (SCALE.md "Cluster note: the r16
     materialize=True defaults").

@@ -399,8 +399,8 @@ def dsir_logweights(
     so the per-doc score is an EXACT 64-bit ``Σ c·λ_u`` — immune to
     partition fold order, unlike a double ``F.sum`` whose accumulator
     ulp exceeds 1e-6 once the running sum is large — divided by 1e6
-    exactly once at the end (CORRECTNESS_r07 flagged the double-fold
-    variant: DuckDB's sequential fold and Spark's partial-merge fold
+    exactly once at the end (a round-7 parity run flagged the
+    double-fold variant: DuckDB's sequential fold and Spark's partial-merge fold
     landed on opposite sides of the 6-dp half boundary).
 
     Returns ``(id_col, log_importance, n_features)`` for every raw

@@ -351,10 +351,10 @@ def consolidate_total(
     cluster runs) — measured on the all-8 capstone at sf0.1: 36.0 s
     fully lazy → 19.6 s materialized once (an eager per-pipeline
     thread-pool variant was tried and measured SLOWER, 21-24 s: eight
-    separate checkpoint jobs beat none of the shared-plan execution,
-    see OPTIMIZATION_r16.md). ``materialize=False`` keeps the fully
-    lazy single-plan form for callers that would rather recompute the
-    pipelines than store the location-grain intermediate.
+    separate checkpoint jobs beat none of the shared-plan execution;
+    round-16 optimization notes, in git history). ``materialize=False``
+    keeps the fully lazy single-plan form for callers that would rather
+    recompute the pipelines than store the location-grain intermediate.
     """
     total = A.union_rows(fuel_outputs, allow_missing=True)
     total = total.drop("company_id")

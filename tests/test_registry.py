@@ -1,22 +1,14 @@
 """Driver-contract invariants: the registry the driver consumes must
-stay internally consistent no matter how queries rotate."""
+stay internally consistent."""
 
 import __spark_entry__ as entrymod
 from bench import HEADLINE
-
-
-def test_defer_list_names_exist():
-    # a typo in _DEFER_TO_TAIL would silently grade the wrong window
-    missing = [n for n in entrymod._DEFER_TO_TAIL if n not in entrymod._QUERIES]
-    assert missing == []
 
 
 def test_oracles_subset_of_queries_and_aligned():
     q = entrymod.queries()
     o = entrymod.oracle_sql()
     assert set(o) <= set(q)
-    # rotation must preserve pairing order-independence: every oracled
-    # name resolves to the same SQL before and after rotation
     assert all(entrymod._ORACLES[k] == v for k, v in o.items())
 
 
@@ -25,29 +17,12 @@ def test_bench_headline_names_registered():
     assert [n for n in HEADLINE if n not in q] == []
 
 
-def test_graded_window_is_full():
+def test_registry_order_and_oracle_coverage():
     names = list(entrymod.queries())
-    assert len(names) >= 50
-    # round 4: every query in the graded window carries a DuckDB
-    # oracle — the two rows-only pyspark.ml queries now ride their
-    # ORACLED verified derivatives (ml_*_join_verified) and sit in the
-    # deferred tail
-    o = entrymod.oracle_sql()
-    rows_only = [n for n in names[:50] if n not in o]
-    assert rows_only == []
-
-
-def test_deferred_queries_have_not_drifted():
-    """ADVICE r2: a deferred query rides an earlier round's green
-    CORRECTNESS row — valid only while its code + oracle are
-    byte-stable. Every _DEFER_TO_TAIL entry must carry a recorded
-    fingerprint that still matches; on a deliberate change, run
-    tools/gen_defer_hashes.py AND move the query back into the graded
-    head."""
-    assert set(entrymod._DEFER_HASHES) == set(entrymod._DEFER_TO_TAIL)
-    drifted = [
-        n
-        for n in entrymod._DEFER_TO_TAIL
-        if entrymod._defer_fingerprint(n) != entrymod._DEFER_HASHES[n]
-    ]
-    assert drifted == []
+    # queries() is the registry in registration order, as a copy
+    assert names == list(entrymod._QUERIES)
+    assert entrymod.queries() is not entrymod._QUERIES
+    # every registered query carries an oracle, in the same order
+    assert list(entrymod.oracle_sql()) == names
+    # entry() runs the flagship query
+    assert "agg_sum_groups" in names

@@ -9,11 +9,12 @@ list/struct cells crash the driver canonicalizer outright
 (``unhashable type: 'list'`` — pq_encode r7, mean_pool r8).
 
 These tests are STATIC — Spark schemas come from plan analysis and
-DuckDB types from ``DESCRIBE <query>``, no job runs — so the sweep
-covers every graded-head query in seconds:
+DuckDB types from ``DESCRIBE <query>``; no job runs except inside the
+few eagerly-materializing operators — so the sweep covers every
+registered query:
 
-* no graded Spark schema contains Decimal/Array/Map/Struct;
-* no graded oracle declares HUGEINT, DECIMAL, or a nested type;
+* no registered Spark schema contains Decimal/Array/Map/Struct;
+* no oracle declares HUGEINT, DECIMAL, or a nested type;
 * per column (matched by name), the two engines declare the same KIND
   (integer / float / string / bool / timestamp / date) — the exact
   condition under which pandas renders identical canonical strings.
@@ -70,15 +71,15 @@ def _spark_kind(dt: T.DataType) -> str:
 
 
 @pytest.fixture(scope="module")
-def graded(spark, sf_dir):
-    """(name, spark schema, oracle declared types) for the graded head."""
-    names = list(entrymod.queries().items())[:50]
+def registered(spark, sf_dir):
+    """(name, Spark schema, oracle declared types) for EVERY registered
+    query."""
     oracles = entrymod.oracle_sql()
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.sql(f"CREATE VIEW {t} AS FROM '{sf_dir}/{t}.parquet'")
     out = []
-    for name, fn in names:
+    for name, fn in entrymod.queries().items():
         schema = fn(spark, sf_dir).schema
         duck_types = None
         if name in oracles:
@@ -89,24 +90,24 @@ def graded(spark, sf_dir):
     return out
 
 
-def test_graded_spark_schemas_are_scalar_and_exact(graded):
+def test_graded_spark_schemas_are_scalar_and_exact(registered):
     bad = {
         name: [f.name + ":" + f.dataType.simpleString()
                for f in schema.fields
                if isinstance(f.dataType, _BANNED_SPARK)]
-        for name, schema, _ in graded
+        for name, schema, _ in registered
     }
     bad = {k: v for k, v in bad.items() if v}
     assert not bad, (
-        "graded Spark schemas outside the type contract "
+        "registered Spark schemas outside the type contract "
         "(Decimal → pandas Decimal-object vs DuckDB float64; "
         "Array/Map/Struct crash the driver canonicalizer): " + str(bad)
     )
 
 
-def test_graded_oracle_types_are_scalar_and_exact(graded):
+def test_graded_oracle_types_are_scalar_and_exact(registered):
     bad = {}
-    for name, _, duck_types in graded:
+    for name, _, duck_types in registered:
         if not duck_types:
             continue
         rows = [
@@ -116,15 +117,15 @@ def test_graded_oracle_types_are_scalar_and_exact(graded):
         if rows:
             bad[name] = rows
     assert not bad, (
-        "graded oracles declare HUGEINT/DECIMAL/nested types "
+        "oracles declare HUGEINT/DECIMAL/nested types "
         "(pandas renders them float64/list — hash-mismatch vs Spark): "
         + str(bad)
     )
 
 
-def test_graded_column_kinds_align_across_engines(graded):
+def test_graded_column_kinds_align_across_engines(registered):
     bad = {}
-    for name, schema, duck_types in graded:
+    for name, schema, duck_types in registered:
         if not duck_types:
             continue
         spark_kinds = {f.name: _spark_kind(f.dataType) for f in schema.fields}
@@ -251,21 +252,9 @@ _INT32_ALLOWED: dict[str, frozenset] = {
 _NARROW_INT = (T.IntegerType, T.ShortType, T.ByteType)
 
 
-@pytest.fixture(scope="module")
-def all_registered_schemas(spark, sf_dir):
-    """(name, Spark schema) for EVERY registered query — plan analysis
-    only, no jobs (except the few eagerly-materializing operators)."""
-    return [
-        (name, fn(spark, sf_dir).schema)
-        for name, fn in entrymod.queries().items()
-    ]
-
-
-def test_no_unaudited_int32_in_any_registered_projection(
-    all_registered_schemas,
-):
+def test_no_unaudited_int32_in_any_registered_projection(registered):
     bad = {}
-    for name, schema in all_registered_schemas:
+    for name, schema, _ in registered:
         narrow = {
             f.name for f in schema.fields
             if isinstance(f.dataType, _NARROW_INT)
@@ -281,11 +270,11 @@ def test_no_unaudited_int32_in_any_registered_projection(
     )
 
 
-def test_int32_allowlist_has_no_stale_entries(all_registered_schemas):
+def test_int32_allowlist_has_no_stale_entries(registered):
     """The freeze must shrink as sources widen — an allowlist entry
     whose column is no longer int32 (or whose query is gone) is
     stale."""
-    current = {name: schema for name, schema in all_registered_schemas}
+    current = {name: schema for name, schema, _ in registered}
     stale = {}
     for name, cols in _INT32_ALLOWED.items():
         if name not in current:

@@ -1,13 +1,14 @@
 """One-shot pre-flight for a build round — runs the verify skill's
 surfaces in order and stops at the first failure:
 
-1. registry drift gate (pytest tests/test_registry.py)
-2. graded-head parity at the driver's gate scale (sf0.01, first 50)
+1. registry invariants (pytest tests/test_registry.py)
+2. full-registry parity at the driver's gate scale (check_parity.py's
+   default sf0.01 directory, every registered query)
 3. driver-style fresh-process consumption (plain SparkSession)
 4. bench CLI JSON line at sf0.001 (shape check, not a measurement)
 
     python tools/roundcheck.py            # full pre-flight
-    python tools/roundcheck.py --fast     # skip parity (heads: ~6 min)
+    python tools/roundcheck.py --fast     # skip parity (~4 min on 4 cores)
 """
 
 import json
@@ -33,19 +34,14 @@ def step(title: str, argv: list[str]) -> str:
 def main() -> None:
     fast = "--fast" in sys.argv
 
-    step("registry drift gate", [
+    step("registry invariants", [
         sys.executable, "-m", "pytest", "tests/test_registry.py", "-x", "-q",
     ])
 
     if not fast:
-        sys.path.insert(0, REPO)
-        import __spark_entry__ as m  # noqa: PLC0415
-
-        head = list(m.queries())[:50]
         out = step(
-            "graded-head parity (sf0.01)",
-            [sys.executable, "tools/check_parity.py",
-             "/root/testdata/sf0.01", *head],
+            "full-registry parity (sf0.01)",
+            [sys.executable, "tools/check_parity.py"],
         )
         tail = [ln for ln in out.splitlines() if "failures" in ln]
         print(tail[-1] if tail else out[-200:])

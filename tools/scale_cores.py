@@ -1,12 +1,14 @@
 """Parallel-scaling evidence (VERDICT r16 item 2): the sf0.1 bench is
-fixed-cost-bound (8 cores BEAT 32 in BENCH_r16_c8), so "scales with
-cores" claims need a larger input. This tool replicates sf0.1 N×
-(shifted keys — tools/scale_test.py's generator) and times the
-heaviest benched paths at two core counts in FRESH processes (the
-master string is baked into a session, so per-core runs must not share
-one).
+fixed-cost-bound (8 cores beat 32 on it; SCALE.md "Parallel-scaling
+evidence"), so "scales with cores" claims need a larger input. This
+tool replicates sf0.1 N× (shifted keys — tools/scale_test.py's
+generator) and times the heaviest benched paths at two core counts in
+FRESH processes (the master string is baked into a session, so
+per-core runs must not share one).
 
     python tools/scale_cores.py [N] [--cores 8,32] [--queries a,b,...]
+
+``--cores`` and ``--queries`` also accept the ``--cores=8,32`` form.
 
 Prints one JSON line per (cores, query) and a final summary with the
 low/high-core speedup per query. A ratio near cores_hi/cores_lo means
@@ -16,6 +18,7 @@ the path parallelizes; near 1.0 means fixed-cost-bound at this size
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import subprocess
@@ -67,19 +70,41 @@ print("RESULT " + json.dumps(out))
 """
 
 
+def _core_counts(text: str) -> list[int]:
+    try:
+        cores = [int(c) for c in text.split(",")]
+    except ValueError:
+        raise argparse.ArgumentTypeError(
+            f"expected comma-separated integers, got {text!r}"
+        ) from None
+    if min(cores) <= 0:
+        raise argparse.ArgumentTypeError(
+            f"core counts must be positive, got {text!r}"
+        )
+    return cores
+
+
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Time the heaviest benched paths on N× sf0.1 at two "
+        "core counts, one fresh process per count."
+    )
+    ap.add_argument("n", nargs="?", type=int, default=10,
+                    help="replication factor of sf0.1 (default 10)")
+    ap.add_argument("--cores", type=_core_counts, default=[8, 32],
+                    help="comma-separated core counts (default 8,32)")
+    ap.add_argument("--queries", type=lambda s: s.split(","),
+                    default=list(DEFAULT_QUERIES),
+                    help="comma-separated registry names")
+    return ap.parse_args(argv)
+
+
 def main() -> None:
-    n = int(sys.argv[1]) if len(sys.argv) > 1 and not sys.argv[1].startswith("--") else 10
-    cores = [8, 32]
-    queries = list(DEFAULT_QUERIES)
-    for arg in sys.argv[1:]:
-        if arg.startswith("--cores="):
-            cores = [int(c) for c in arg.split("=", 1)[1].split(",")]
-        if arg.startswith("--queries="):
-            queries = arg.split("=", 1)[1].split(",")
+    args = parse_args()
+    n, cores, queries = args.n, args.cores, args.queries
 
     out_dir = f"/tmp/scale_sf{n}x"
     # build the replicated inputs once (any core count works here)
-    sys.path.insert(0, "/root/repo/tools")
     from gem_data_wrangle_spark import get_spark  # noqa: PLC0415
     from scale_test import replicate  # noqa: PLC0415
 

@@ -30,7 +30,7 @@ near-orthogonal instead (|cos| ~ N(0, 1/sqrt(dim))).
 
 Round-16 follow-up: the band-keyed members (neardup, hamming) join
 the matrix — their layout win was measured only as single-batch A/Bs
-(tools/compact_ab_banded.py); the sustained variants here close the
+(SCALE.md, round 16); the sustained variants here close the
 four-member matrix. Neardup batches are salted docs through the
 MinHash pass (the screen's own cost dominates); hamming batches are
 synthetic 32-bit signature halves (xxhash-derived — random values
