@@ -4899,8 +4899,8 @@ def _q_neardup_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Gopher/C4-style quality rule flags: word-count bounds, mean word
 # length, symbol ratio, duplicate-word fraction, top-bigram fraction —
 # all integer-derived ratios, engine-stable at 4 dp. The top-bigram
-# scan covers the first 5000 tokens only (the operator's
-# max_scan_tokens quadratic bound); linear metrics see the whole doc.
+# count covers the first 5000 tokens only (the operator's
+# max_scan_tokens prefix); the other metrics see the whole doc.
 @_register(
     "gopher_quality_flags",
     """

@@ -42,6 +42,43 @@ def test_minhash_lsh_finds_near_dups(spark):
         assert 0.0 <= v <= 1.0
 
 
+@pytest.mark.parametrize("bands,rows,ngram", [(4, 4, 2), (2, 3, 1), (3, 2, 3)])
+def test_minhash_signatures_match_md5_replica(spark, bands, rows, ngram):
+    """(id, band, signature) rows and schema against a pure-Python
+    replica: distinct word n-grams, hash i = md5('{i}|' + shingle),
+    band signature = concat of ``rows`` lexicographic min-hashes, and a
+    NULL signature for a shingle-less document."""
+    import hashlib
+
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+    rows_in = DOCS + [(6, "solo"), (7, ""), (8, None)]
+    sigs = D.minhash_signatures(
+        spark.createDataFrame(rows_in, "doc_id bigint, text string"), "text", "doc_id",
+        bands, rows, ngram,
+    )
+    assert sigs.schema == StructType([
+        StructField("doc_id", LongType()),
+        StructField("band", LongType(), False),
+        StructField("signature", StringType()),
+    ])
+
+    def replica(text, band):
+        if text is None:
+            return None
+        toks = text.split(" ")
+        sh = dict.fromkeys(" ".join(toks[i:i + ngram]) for i in range(len(toks) - ngram + 1))
+        if not sh:
+            return None
+        return "".join(
+            min(hashlib.md5(f"{band * rows + r}|{s}".encode()).hexdigest() for s in sh)
+            for r in range(rows)
+        )
+
+    want = sorted((i, b, replica(t, b)) for i, t in rows_in for b in range(bands))
+    assert sorted(tuple(r) for r in sigs.collect()) == want
+
+
 def test_simhash_similarity_structure(spark):
     sh = {r["doc_id"]: r["simhash"] for r in D.simhash_table(_docs(spark), "text", "doc_id").collect()}
     assert sh[1] == sh[2]  # identical text → identical signature
@@ -517,6 +554,105 @@ def test_gopher_top_bigram_scan_is_capped(spark):
     # every capped bigram is distinct -> top fraction = 1/4999
     assert abs(row["top_bigram_frac"] - round(1 / 4999, 4)) < 1e-9
     assert took < 60, f"degenerate doc took {took:.1f}s — cap not effective"
+
+
+def _top_bigram_frac_ref(text, cap):
+    """Pure-Python restatement: split on ' ', first ``cap`` tokens,
+    count of the most frequent bigram / number of bigrams, 4 dp."""
+    from collections import Counter
+
+    if text is None:
+        return None
+    toks = text.split(" ")[:cap]
+    bigrams = [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+    if not bigrams:
+        return None
+    return round(max(Counter(bigrams).values()) / len(bigrams), 4)
+
+
+TOP_BIGRAM_DOCS = [
+    (1, "a b a b c d c d"),          # two bigrams tie at the top
+    (2, "x x x x x"),                # one token repeated
+    (3, "x y x y x y"),              # alternating
+    (4, "a b c d e f x x x x x x"),  # dominant run past a small cap
+    (5, "a b c x x x x x"),          # run starting right at the cap
+    (6, ""),
+    (7, "solo"),
+    (8, None),
+    (9, "a  b  a  b"),               # doubled spaces: empty tokens
+    (10, "é ü é ü é"),
+    (11, "日本 語 日本 語 日本"),
+    (12, "the cat sat on the mat the cat sat"),
+]
+
+
+@pytest.mark.parametrize("cap", [1, 2, 3, 6, 5000])
+def test_gopher_top_bigram_matches_counter_reference(spark, cap):
+    """The sorted-run fold gives the same ``top_bigram_frac`` and
+    ``pass_top_bigram`` as a Counter over the capped bigrams, both in
+    the bare output and in the rows a ``quality_pass`` filter keeps
+    (where the optimizer inlines the scoring into the filter)."""
+    docs = spark.createDataFrame(TOP_BIGRAM_DOCS, "doc_id bigint, text string")
+    relaxed = dict(min_words=1, min_mean_word_len=0.0, max_symbol_ratio=1.0,
+                   max_dup_word_frac=1.0, max_top_bigram_frac=0.5)
+    scored = T.gopher_quality(docs, "text", "doc_id", max_scan_tokens=cap, **relaxed)
+    bare = {r["doc_id"]: r for r in scored.collect()}
+    texts = dict(TOP_BIGRAM_DOCS)
+    for i, text in texts.items():
+        want = _top_bigram_frac_ref(text, cap)
+        assert bare[i]["top_bigram_frac"] == want, (i, cap)
+        assert bare[i]["pass_top_bigram"] is (want is None or want <= 0.5), (i, cap)
+    others = [c for c in scored.columns if c.startswith("pass_") and c != "pass_top_bigram"]
+    expect = {
+        i for i in texts
+        if all(bare[i][c] for c in others)
+        and (_top_bigram_frac_ref(texts[i], cap) or 0) <= 0.5
+    }
+    kept = scored.filter("quality_pass").collect()
+    assert {r["doc_id"] for r in kept} == expect
+    assert all(r == bare[r["doc_id"]] for r in kept)
+    if cap == 5000:
+        assert expect == {1, 4, 7, 9, 10, 11, 12}
+
+
+def test_ngram_jaccard_pairs_matches_positional_form(spark):
+    """``ngram_jaccard_pairs`` builds its sets with ``_shingles``; the
+    values equal the earlier per-position ``element_at`` form on
+    crawl-shaped documents and on documents shorter than ``n``."""
+    rows = DOCS + [
+        (6, "the quick brown fox jumps over the lazy dog the quick brown fox"),
+        (7, "lazy dog"), (8, "dog"), (9, ""), (10, "fox  jumps over"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    ids = [r[0] for r in rows]
+    # pairs of two shingle-less documents divide 0 by 0 in both forms
+    cands = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b and a <= 6], "id_a bigint, id_b bigint"
+    )
+
+    def positional(n):
+        toks = F.split(F.col("text"), " ")
+        sh = F.array_distinct(F.transform(
+            F.slice(toks, 1, F.greatest(F.size(toks) - (n - 1), F.lit(0))),
+            lambda x, i: F.concat_ws(" ", *[F.element_at(toks, i + k + 1) for k in range(n)]),
+        ))
+        sets = docs.select("doc_id", sh.alias("_sh"))
+        return (
+            cands.join(sets.select(F.col("doc_id").alias("id_a"), F.col("_sh").alias("_sa")), "id_a")
+            .join(sets.select(F.col("doc_id").alias("id_b"), F.col("_sh").alias("_sb")), "id_b")
+            .select("id_a", "id_b", F.round(
+                F.size(F.array_intersect("_sa", "_sb")) / F.size(F.array_union("_sa", "_sb")), 4
+            ).alias("ngram_jaccard"))
+        )
+
+    for n in (1, 2, 3, 4):
+        got = D.ngram_jaccard_pairs(docs, "text", "doc_id", cands, n)
+        want = positional(n)
+        assert got.columns == ["id_a", "id_b", "ngram_jaccard"]
+        assert sorted(got.collect()) == sorted(want.collect()), n
+    by_pair = {(r.id_a, r.id_b): r.ngram_jaccard
+               for r in D.ngram_jaccard_pairs(docs, "text", "doc_id", cands, 2).collect()}
+    assert by_pair[(1, 2)] == 1.0 and by_pair[(1, 9)] == 0.0 and by_pair[(1, 7)] == round(1 / 8, 4)
 
 
 def test_shared_substring_pairs_finds_spans_and_gates_boilerplate(spark):

@@ -296,3 +296,58 @@ def test_prepare_training_corpus_complete_audit_trail(spark):
     out = prepare_training_corpus(docs, gopher_kwargs={"min_words": 10})
     reject_ids = {r.doc_id for r in out["rejects"].select("doc_id").collect()}
     assert {1, 2} <= reject_ids
+
+
+CURATION_A = "river stones gather moss while quiet farmers plant barley under pale morning skies"
+CURATION_DOCS = [
+    (1, CURATION_A),
+    (2, CURATION_A),  # exact duplicate
+    # case, punctuation and whitespace variant: same canonical text
+    (3, "River, stones  gather moss while QUIET farmers plant barley under pale morning skies!"),
+    (4, "tiny note here"),  # too short
+    (5, "@@## $$%% ^^&& **(( ))__ ++== {{}} [[]] ;;::"),  # symbol-heavy
+    (6, "  \t \n  "),  # normalizes to empty
+    # fails only pass_top_bigram: 'alpha beta' is 4 of 19 bigrams
+    (7, "alpha beta river gamma delta alpha beta stone epsilon zeta "
+        "alpha beta cloud theta kappa alpha beta field lambda sigma"),
+    (8, "copper wires carry signals across mountain valleys toward distant harbor towns"),
+    (9, "every autumn the orchard workers sort apples into wooden crates before "
+        "trucks haul them north along winding coastal roads"),
+    (10, "scientists measured glacier retreat using satellite images collected over "
+         "three decades and found melting accelerated sharply after warmer summers arrived"),
+    (11, "small bakeries open early selling fresh bread to commuters"),
+    (12, "the museum reopened its east wing showing restored paintings from local artists"),
+]
+
+
+def test_prepare_training_corpus_small_pinned(spark):
+    """Every stage of the curation recipe on hand-made documents: the
+    quality gate, canonical dedup, the weighted sample and chunking,
+    with the surviving ids, duplicate counts and column order pinned."""
+    from gem_data_wrangle_spark.plans.corpus import prepare_training_corpus
+
+    docs = spark.createDataFrame(CURATION_DOCS, "doc_id bigint, text string")
+    out = prepare_training_corpus(docs, chunk_size=8, chunk_overlap=2, weight_denominator=16,
+                                  gopher_kwargs={"min_words": 8})
+    metrics = ["n_words", "mean_word_len", "symbol_ratio", "dup_word_frac", "top_bigram_frac",
+               "pass_word_count", "pass_mean_word_len", "pass_symbol_ratio", "pass_dup_words",
+               "pass_top_bigram", "quality_pass"]
+    assert out["rejects"].columns == ["doc_id", "text", *metrics]
+    assert out["documents"].columns == ["doc_id", "text", *metrics, "n_dups", "split"]
+    assert out["chunks"].columns == ["doc_id", "chunk_id", "chunk_text", "chunk_tokens"]
+
+    rejects = {r.doc_id: r for r in out["rejects"].collect()}
+    assert sorted(rejects) == [4, 5, 6, 7]
+    assert rejects[4].pass_word_count is False
+    assert rejects[5].pass_symbol_ratio is False
+    assert rejects[6].quality_pass is False and rejects[6].symbol_ratio is None
+    failed_7 = [c for c in metrics if c.startswith("pass_") and not rejects[7][c]]
+    assert failed_7 == ["pass_top_bigram"] and rejects[7].top_bigram_frac == round(4 / 19, 4)
+
+    # 2 and 3 fold into keeper 1; the sample keeps 9 and 10 (>= 16
+    # words) always and draws 1, 11 in and 8, 12 out
+    documents = {r.doc_id: r.n_dups for r in out["documents"].collect()}
+    assert documents == {1: 3, 9: 1, 10: 1, 11: 1}
+    chunks = sorted((r.doc_id, r.chunk_id, r.chunk_tokens) for r in out["chunks"].collect())
+    assert chunks == [(1, 0, 8), (1, 1, 7), (9, 0, 8), (9, 1, 8), (9, 2, 7),
+                      (10, 0, 8), (10, 1, 8), (10, 2, 8), (11, 0, 8), (11, 1, 3)]

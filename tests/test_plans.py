@@ -206,3 +206,56 @@ def test_normalized_dedup_shuffles_digests_not_documents(spark, sf_dir):
     assert m, plan
     post = plan[: m.start()]  # printed above the exchange = after it
     assert "text#" not in post
+
+
+def _hofs_over_expressions_in_lambdas(spark, plan) -> list[str]:
+    """Higher-order functions inside a lambda body whose array argument
+    is neither a lambda variable nor an attribute. Spark re-evaluates
+    such an argument for every element of the enclosing lambda, which
+    makes the row's cost quadratic."""
+    def cls(name):
+        return spark._jvm.java.lang.Class.forName(f"org.apache.spark.sql.catalyst.expressions.{name}")
+
+    hof, lam, var, attr = map(cls, ("HigherOrderFunction", "LambdaFunction",
+                                    "NamedLambdaVariable", "Attribute"))
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    bad = []
+
+    def walk(e, in_lambda):
+        if in_lambda and hof.isInstance(e):
+            bad.extend(e.toString()[:160] for a in seq(e.arguments())
+                       if not (var.isInstance(a) or attr.isInstance(a)))
+        for c in seq(e.children()):
+            walk(c, in_lambda or lam.isInstance(e))
+
+    def walk_plan(p):
+        for e in seq(p.expressions()):
+            walk(e, False)
+        for c in seq(p.children()):
+            walk_plan(c)
+
+    walk_plan(plan)
+    return bad
+
+
+def test_quality_gate_scores_without_nested_array_rebuilds(spark):
+    """The ``quality_pass`` filter is pushed below the scoring
+    projections and inlines every metric alias. No metric may then
+    hold a higher-order function over an inlined array expression
+    inside a lambda: a top-bigram count of the form
+    ``transform(distinct bigrams, x -> size(filter(<bigrams>, ...)))``
+    would rebuild the inlined ``zip_with(slice(split(...)))`` for every
+    distinct bigram."""
+    from pyspark.sql import functions as F
+
+    from gem_data_wrangle_spark.operators.textops import gopher_quality
+
+    docs = spark.createDataFrame([(1, "a b a b c")], "doc_id bigint, text string")
+    gated = gopher_quality(docs, "text", "doc_id").filter(
+        F.coalesce(F.col("quality_pass"), F.lit(False))
+    )
+    bad = _hofs_over_expressions_in_lambdas(spark, gated._jdf.queryExecution().optimizedPlan())
+    assert not bad, bad

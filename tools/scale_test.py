@@ -325,11 +325,10 @@ def main() -> None:
         print(json.dumps({f"hotkey {label}": results[f"hotkey {label}"]}))
 
     # degenerate-document stress (VERDICT r5 item 4): ONE multi-MB
-    # random-token document through gopher_quality. The top-bigram scan
-    # is O(distinct·n) inside a row — uncapped, ~1.5M distinct bigrams
-    # × 1.5M elements spins one task for minutes; the max_scan_tokens
-    # cap (first 5000 tokens) bounds the row at ~25M compares, so the
-    # whole job must finish in seconds.
+    # random-token document through gopher_quality. The linear metrics
+    # scan all 1.5M tokens; the top-bigram count sorts only the first
+    # max_scan_tokens (5000) tokens' bigrams, so the whole job must
+    # finish in seconds.
     from gem_data_wrangle_spark.operators import textops as Tx  # noqa: PLC0415
 
     degen = spark.range(1).select(
